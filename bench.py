@@ -18,6 +18,7 @@ per-key 2x gate consumes.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import time
@@ -73,8 +74,12 @@ def main() -> None:
         # inflate later keys via GC pressure (measured: minhash 4.2 s at
         # bench slot 8 vs 2.2 s in a fresh session, same config). Each
         # key's own warmup run refills its cache, so steady-state timing
-        # still measures the warm-cache plan.
+        # still measures the warm-cache plan. clearCache() does not reach
+        # localCheckpoint blocks (the graph keys' iteration barriers); they
+        # are released only once their Python DataFrames are collected and
+        # the ContextCleaner runs, so collect them here.
         spark.catalog.clearCache()
+        gc.collect()
         # The warmup run is also timed and reported as first_run_sec
         # (r15, reporting honesty): it includes codegen, Arrow init and
         # any intra-query cache FILL, so cache_once keys cannot hide the

@@ -5,11 +5,12 @@ of "is a duplicate of" to pick one canonical document per group; pairs
 alone over-delete (A~B, B~C must keep exactly one of {A,B,C}, not two
 survivors of two independent pair decisions).
 
-Algorithm: min-label propagation. Every node starts as its own component;
-each round, every node adopts the smallest label among itself and its
-neighbors; fixpoint in O(max component diameter) rounds. Each round is two
-keyed shuffles (join on dst, groupBy src) — fully distributed, no driver
-state beyond the converged? flag. For 100 TB graphs with high-diameter
+Algorithm: min-label propagation with pointer jumping. Every node starts
+as its own component; each round, every node adopts the smallest label
+among its neighbours' labels and the label of its own label. Each round
+is one keyed join and one keyed aggregation — fully distributed, no
+driver state beyond the converged? flag — and rounds are O(log diameter)
+thanks to the pointer jump. For 100 TB graphs with high-diameter
 components, the published upgrade is the large-star/small-star rewrite
 (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14),
 which contracts in O(log²) rounds with the same join/agg primitives;
@@ -33,82 +34,88 @@ def connected_components(
 ) -> DataFrame:
     """(id, component) where component = min node id reachable from id.
 
-    ``edges`` may be directed input; it's symmetrized here so components
-    are of the undirected graph. Isolated nodes keep their own id.
+    ``nodes`` holds unique, non-null ids; the output has exactly one row
+    per node. ``edges`` may be directed input; it's symmetrized here so
+    components are of the undirected graph. An edge endpoint that is not
+    in ``nodes`` neither relays labels nor appears in the output.
+    Isolated nodes keep their own id.
 
-    Each iteration materializes (cache + count) so the plan doesn't grow a
-    per-round lineage chain — the count doubles as the convergence check
-    (# of nodes whose label shrank), so the action is not wasted work.
+    Each round sends one label request per neighbour plus one for the
+    label of the node's own label, answers all of them in ONE join
+    against the current labels, and keeps the minimum with ONE groupBy.
+    Labels only ever fall and always name a node of the same component
+    with ``comp[x] <= x``, so the fixpoint is reached exactly when no
+    edge joins two different labels; that check is the round's only
+    action.
     """
-    sym = edges.select(
-        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-    )
-    # localCheckpoint, not cache(): each round's plan references the
-    # previous round's frame TWICE (the neighbor join and the merge), so
-    # under cache() the LOGICAL plan doubles per round — analysis cost
-    # grows 2^rounds and OOMs the driver near round ~7 on any
-    # high-diameter graph (observed on the DBSCAN eps-graph; the
-    # low-diameter dedup graphs converged before the wall). Checkpoint
-    # truncates lineage so every round plans against a leaf. At cluster
-    # scale prefer a reliable checkpoint dir (localCheckpoint loses
-    # partitions with a dead executor); the shape is identical.
-    cc = nodes.select(
-        F.col(id_col).alias("v"), F.col(id_col).alias("comp")
-    ).localCheckpoint(eager=True)
-    changed = -1
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(cc, sym["d"] == cc["v"])
-            .groupBy("s")
-            .agg(F.min("comp").alias("nbr_comp"))
+    # Symmetrized once, checkpointed lazily: the first round's action
+    # fills it, and later rounds read it instead of re-running the edge
+    # query (a self-join for the dedup keys) inside every round.
+    sym = (
+        edges.select(
+            F.col(src_col).alias("v"), F.col(dst_col).alias("want")
         )
-        step = cc.join(nbr_min, cc["v"] == nbr_min["s"], "left").select(
-            "v",
-            F.least(
-                F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-            ).alias("comp"),
-            (F.col("nbr_comp") < F.col("comp")).alias("_shrank"),
-        )
-        # pointer jumping (path compression): also adopt the label OF the
-        # current label — min-label propagation alone needs O(diameter)
-        # rounds; the extra keyed join shortcuts long chains to
-        # O(log diameter). Correctness is unchanged: a label is always
-        # the id of some node in the same component, and least() is
-        # monotone, so the fixpoint (= component min) is identical.
-        lk = step.select(
-            F.col("v").alias("lv"), F.col("comp").alias("lcomp")
-        )
-        nxt = (
-            step.join(lk, step["comp"] == lk["lv"], "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("comp"), F.coalesce("lcomp", F.col("comp"))
-                ).alias("comp"),
-                (
-                    F.col("_shrank")
-                    | (F.col("lcomp") < F.col("comp"))
-                ).alias("_shrank"),
+        .unionByName(
+            edges.select(
+                F.col(dst_col).alias("v"), F.col(src_col).alias("want")
             )
-            .localCheckpoint(eager=True)
         )
-        changed = nxt.where(F.col("_shrank")).count()
-        cc = nxt.select("v", "comp")
-        if changed == 0:
-            break
-    if changed != 0:
-        # Propagation needs O(component diameter) rounds; silently
-        # returning unconverged labels would mis-cluster. A graph that
-        # trips this wants the large-star/small-star contraction (see
-        # module docstring), not a bigger max_iter.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still shrinking) — component diameter "
-            "exceeds the propagation budget"
+        .withColumn("own", F.lit(False))
+        .localCheckpoint(eager=False)
+    )
+    cc = nodes.select(F.col(id_col).alias("v"), F.col(id_col).alias("comp"))
+    for _ in range(max_iter):
+        # Pointer jumping rides the same join: the request for comp[v]
+        # returns comp[comp[v]] <= comp[v], which also makes an own-label
+        # term unnecessary. Only own-label requests come from ``nodes``,
+        # so max("own") drops edge endpoints that are not nodes.
+        requests = sym.unionByName(
+            cc.select(
+                "v", F.col("comp").alias("want"), F.lit(True).alias("own")
+            )
         )
-    return cc.select(F.col("v").alias(id_col), F.col("comp").alias("component"))
+        labels = cc.select(F.col("v").alias("want"), F.col("comp").alias("c"))
+        # localCheckpoint, not cache(): each round's plan references the
+        # previous round's frame TWICE (requests and labels), so under
+        # cache() the LOGICAL plan doubles per round — analysis cost
+        # grows 2^rounds and OOMs the driver near round ~7 on any
+        # high-diameter graph (observed on the DBSCAN eps-graph; the
+        # low-diameter dedup graphs converged before the wall). Checkpoint
+        # truncates lineage so every round plans against a leaf. At cluster
+        # scale prefer a reliable checkpoint dir (localCheckpoint loses
+        # partitions with a dead executor); the shape is identical.
+        cc = (
+            requests.join(labels, "want")
+            .groupBy("v")
+            .agg(F.min("c").alias("comp"), F.max("own").alias("own"))
+            .where(F.col("own"))
+            .select("v", "comp")
+            .localCheckpoint(eager=False)
+        )
+        # Fixpoint: every edge's endpoints agree. Each label is a node of
+        # the same component and no larger than its holder, so a
+        # component-wide label is its minimum. This action also fills
+        # the round's checkpoint. Both lookups join the unrenamed ``cc``
+        # on ``v``, so they plan the same exchange and AQE reuses it.
+        e, a, b = sym.alias("e"), cc.alias("a"), cc.alias("b")
+        split = (
+            e.join(a, F.col("e.v") == F.col("a.v"))
+            .join(b, F.col("e.want") == F.col("b.v"))
+            .where(F.col("a.comp") != F.col("b.comp"))
+        )
+        if split.isEmpty():
+            return cc.select(
+                F.col("v").alias(id_col), F.col("comp").alias("component")
+            )
+    # Propagation needs O(log component diameter) rounds; silently
+    # returning unconverged labels would mis-cluster. A graph that trips
+    # this wants the large-star/small-star contraction (see module
+    # docstring), not a bigger max_iter.
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        f"({split.count()} edge directions still join two labels) — "
+        "component diameter exceeds the propagation budget"
+    )
 
 
 def kcore(

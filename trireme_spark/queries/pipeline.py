@@ -570,8 +570,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     set here (same source+lang, n_chars within 2 — cheap blocking-style
     similarity) keeps the oracle's recursive CTE tractable; the operator
     accepts any (src, dst) pair table, e.g. dedup_fuzzy_minhash output.
-    Iterative min-label propagation, two keyed shuffles per round — see
-    operators/graph.py for the 100 TB notes (large-star/small-star).
+    Iterative min-label propagation with pointer jumping: one join and
+    one groupBy per round, stopped when every edge's endpoints share a
+    label — see operators/graph.py for the 100 TB notes
+    (large-star/small-star).
     """
     from trireme_spark.operators.graph import connected_components
 
