@@ -14,6 +14,7 @@ from trireme_spark.sources.connectors import (
     CASSANDRA_FORMAT,
     CassandraSource,
     SolrSink,
+    _format_available,
 )
 
 
@@ -79,12 +80,17 @@ def test_solr_sink_batch_commit_visible_atomically(spark, tmp_path):
     assert sink.read_back(spark).count() == 100
 
 
-def _jar_present(spark, cls: str) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(cls)  # noqa: SLF001
-        return True
-    except Exception:
-        return False
+def test_format_available_answers_without_raising(spark):
+    """The classpath probe returns a boolean for present and absent
+    classes alike; neither connector jar is on this classpath."""
+    assert _format_available(spark, "com.lucidworks.spark.SolrRelation") is False
+    assert (
+        _format_available(
+            spark, "com.datastax.spark.connector.datasource.CassandraCatalog"
+        )
+        is False
+    )
+    assert _format_available(spark, "org.apache.spark.sql.SparkSession") is True
 
 
 def test_cassandra_live_roundtrip(spark):
@@ -93,7 +99,7 @@ def test_cassandra_live_roundtrip(spark):
     a real token-range scan must return the fixture keyspace. This is
     the executable form of the drop-in claim — runs the day the env has
     network + jars, costs one skip here."""
-    if not _jar_present(
+    if not _format_available(
         spark, "com.datastax.spark.connector.datasource.CassandraCatalog"
     ):
         pytest.skip("spark-cassandra-connector jar not on classpath")
@@ -113,7 +119,7 @@ def test_solr_live_roundtrip(spark):
     a reachable ZK (env TRIREME_SOLR_ZKHOST), write-then-read one keyed
     batch through a real collection and assert last-write-wins by
     uniqueKey — the overwrite semantics the emulation mirrors."""
-    if not _jar_present(spark, "com.lucidworks.spark.SolrRelation"):
+    if not _format_available(spark, "com.lucidworks.spark.SolrRelation"):
         pytest.skip("spark-solr jar not on classpath")
     zk = os.environ.get("TRIREME_SOLR_ZKHOST")
     if not zk:

@@ -94,3 +94,21 @@ def test_split_long_fixture_sum_matches_wide(spark):
     for r in out:
         assert _bits(r.s) == _bits(r.w)
         assert _bits(r.q) == _bits(r.qw)
+
+
+def test_session_caches_are_per_session_object(spark):
+    """The shipped-package and py4j-handle caches are weakly keyed by the
+    session object, not by ``id()``: a second session gets entries of its
+    own, and dsum on it still matches the oracle."""
+    from tests.conftest import SF_SMOKE, assert_matches_oracle
+    from trireme_spark import parity, registry, session
+
+    other = spark.newSession()
+    assert other is not spark
+    parity._jvm_handles(spark)
+    parity._jvm_handles(other)
+    key = "agg_pricing_summary"  # dsum over lineitem
+    df = registry.QUERIES[key](other, SF_SMOKE)
+    assert other in session._SHIPPED
+    assert {spark, other} <= set(parity._JVM_HANDLES.keys())
+    assert_matches_oracle(df, registry.ORACLES[key], SF_SMOKE)

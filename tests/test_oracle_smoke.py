@@ -1,0 +1,25 @@
+"""Always-on oracle smoke: the benchmark's keys against the DuckDB oracle
+at sf0.001, in the default suite.
+
+The full-registry parity battery (``test_oracle.py``) is opt-in (``slow``);
+these keys cover a key of each query module, connected components, the
+migration writes and three headline keys, so a wrong answer from a shared
+layer (the fixture reads, the connectors, the session confs) fails the
+default run.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from perfbench.workloads import WORKLOADS
+from tests.conftest import SF_SMOKE, assert_matches_oracle
+from trireme_spark import registry
+
+KEYS = sorted({k for w in WORKLOADS.values() for k in w.keys})
+
+
+@pytest.mark.parametrize("key", KEYS)
+def test_benchmark_key_matches_oracle(spark, key):
+    df = registry.QUERIES[key](spark, SF_SMOKE)
+    assert_matches_oracle(df, registry.ORACLES[key], SF_SMOKE)

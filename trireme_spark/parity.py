@@ -23,6 +23,8 @@ tolerates it (SURVEY.md §5.3 parity traps):
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -42,7 +44,21 @@ _N_CAP = float(1 << 43)
 _HI_CAP = 9.0e18
 
 
-_JVM_HANDLES: dict[int, tuple] = {}
+# session -> (ExpressionUtils, UnscaledValue) py4j class handles, held
+# weakly so an entry dies with its session object.
+_JVM_HANDLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _jvm_handles(spark) -> tuple:
+    handles = _JVM_HANDLES.get(spark)
+    if handles is None:
+        jvm = spark._jvm
+        handles = (
+            jvm.org.apache.spark.sql.classic.ExpressionUtils,
+            jvm.org.apache.spark.sql.catalyst.expressions.UnscaledValue,
+        )
+        _JVM_HANDLES[spark] = handles
+    return handles
 
 
 def _unscaled(c: Column) -> Column:
@@ -57,16 +73,7 @@ def _unscaled(c: Column) -> Column:
     from pyspark.sql import SparkSession
     from pyspark.sql.classic.column import Column as _CCol
 
-    spark = SparkSession.getActiveSession()
-    handles = _JVM_HANDLES.get(id(spark))
-    if handles is None:
-        jvm = spark._jvm
-        handles = (
-            jvm.org.apache.spark.sql.classic.ExpressionUtils,
-            jvm.org.apache.spark.sql.catalyst.expressions.UnscaledValue,
-        )
-        _JVM_HANDLES[id(spark)] = handles
-    eu, uv = handles
+    eu, uv = _jvm_handles(SparkSession.getActiveSession())
     return _CCol(eu.column(uv(eu.expression(c._jc))))
 
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import weakref
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -80,7 +81,10 @@ def prep(spark: SparkSession) -> SparkSession:
     return spark
 
 
-_SHIPPED: set[int] = set()
+# session -> shipped zip path. Weak keys: an entry lives exactly as long as
+# its session object, so a later session never inherits a dead one's entry
+# (an ``id()`` can be reused once its object is collected).
+_SHIPPED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -93,7 +97,7 @@ def _ship_package(spark: SparkSession) -> None:
     is content-hashed so edits during one Python process get a fresh file,
     and re-adding the same name to a live session is a no-op.
     """
-    if id(spark) in _SHIPPED:
+    if spark in _SHIPPED:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     members = []
@@ -119,4 +123,4 @@ def _ship_package(spark: SparkSession) -> None:
                 zf.write(path, arcname)
         os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
-    _SHIPPED.add(id(spark))
+    _SHIPPED[spark] = zpath

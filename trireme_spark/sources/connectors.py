@@ -28,17 +28,25 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
+
+from trireme_spark.sources.io import read_parquet
 
 CASSANDRA_FORMAT = "org.apache.spark.sql.cassandra"
 SOLR_FORMAT = "solr"
 
 
 def _format_available(spark: SparkSession, fmt_class: str) -> bool:
-    """True when the connector's DataSource class is on the JVM classpath."""
+    """True when the connector's DataSource class is on the JVM classpath.
+
+    ``Utils.classIsLoadable`` answers with a boolean; a ``Class.forName``
+    probe would build a Java exception and its stack trace on every miss
+    (about 30 ms of CPU on a 4-core VM). Sessions without a py4j JVM
+    (Spark Connect) answer False."""
     try:
-        spark._jvm.java.lang.Class.forName(fmt_class)  # noqa: SLF001
-        return True
+        utils = spark._jvm.org.apache.spark.util.Utils  # noqa: SLF001
+        return bool(utils.classIsLoadable(fmt_class))
     except Exception:
         return False
 
@@ -76,7 +84,7 @@ class CassandraSource:
                 f"Cassandra connector jar absent and no emulate_path set for "
                 f"{self.keyspace}.{self.table}"
             )
-        df = spark.read.parquet(self.emulate_path)
+        df = read_parquet(spark, self.emulate_path)
         if self.partition_cols:
             # token-range co-location contract: rows of one partition key
             # land in one Spark partition
@@ -91,12 +99,19 @@ class SolrSink:
     Real path: ``df.write.format(SOLR_FORMAT).options(zkhost=…,
     collection=…)`` with ``commit_within`` batching. Emulation: last-write-
     wins per ``unique_key`` (Solr overwrite semantics), written atomically.
+    ``read_back`` reads the emulation with the schema captured at the
+    sink's last ``write``, as ``io.write_read_roundtrip`` does: the
+    directory is rewritten on every call, so inferring it would cost one
+    Spark job per read-back.
     """
 
     collection: str
     unique_key: str = "id"
     zkhost: str = "localhost:9983"
     emulate_dir: str | None = None
+    _schema: StructType | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
 
     def write(
         self,
@@ -134,9 +149,12 @@ class SolrSink:
             .drop("_rn")
         )
         deduped.write.mode("overwrite").parquet(out)
+        self._schema = deduped.schema
 
     def read_back(self, spark: SparkSession) -> DataFrame:
         out = self.emulate_dir or os.path.join(
             "/tmp", f"trireme_solr_{self.collection}"
         )
-        return spark.read.parquet(out)
+        if self._schema is None:  # nothing written through this sink
+            return read_parquet(spark, out)
+        return spark.read.schema(self._schema).parquet(out)
