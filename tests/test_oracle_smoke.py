@@ -1,22 +1,23 @@
-"""Always-on oracle smoke: the benchmark's keys against the DuckDB oracle
-at sf0.001, in the default suite.
+"""Always-on oracle smoke: the benchmark's keys and ``bench.py``'s headline
+keys against the DuckDB oracle at sf0.001, in the default suite.
 
 The full-registry parity battery (``test_oracle.py``) is opt-in (``slow``);
 these keys cover a key of each query module, connected components, the
-migration writes and three headline keys, so a wrong answer from a shared
-layer (the fixture reads, the connectors, the session confs) fails the
-default run.
+migration writes and all twelve ``bench.py`` keys, so a wrong answer from a
+shared layer (the fixture reads, the connectors, the session confs, the
+exact-decimal sums) fails the default run.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from bench import HEADLINE
 from perfbench.workloads import WORKLOADS
 from tests.conftest import SF_SMOKE, assert_matches_oracle
 from trireme_spark import registry
 
-KEYS = sorted({k for w in WORKLOADS.values() for k in w.keys})
+KEYS = sorted({k for w in WORKLOADS.values() for k in w.keys} | set(HEADLINE))
 
 
 @pytest.mark.parametrize("key", KEYS)

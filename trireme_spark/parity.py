@@ -8,12 +8,16 @@ tolerates it (SURVEY.md §5.3 parity traps):
 * **Double SUM/AVG** — parallel summation order differs between engines and
   between runs (partial aggregation). Fix: evaluate the per-row expression in
   IEEE double (bit-identical across engines for identical inputs and operator
-  order), round-trip through ``DECIMAL(27,6)`` (deterministic half-up
-  rounding of identical doubles), SUM exactly in decimal (order-independent),
+  order), round each row half-up to a whole number of micro-units
+  ``u = round_half_up(x·10⁶)``, SUM the integers exactly (order-independent),
   cast the total back to double. AVG = exact-sum / count.
   Oracle mirror: ``CAST(SUM(CAST(expr AS DECIMAL(27,6))) AS DOUBLE)``.
-  At 100 TB this costs one widening per row and keeps the sum in Spark's
-  native partial-aggregation path (decimal sums still map-side combine).
+  Spark's decimal cast rounds the double's shortest decimal string
+  (``BigDecimal.valueOf``): a ``Double.toString`` and a BigDecimal per row.
+  :func:`dsum` computes ``u = floor(y + 0.5)`` with ``y = x·10⁶`` in double
+  arithmetic instead wherever that provably equals the cast: ``|x| < 1e9``
+  and ``y`` lies more than ``|y|·1e-15 + 1e-9`` from the half-integer above
+  ``floor(y)``. Ties, larger values, null, NaN and ±inf take the cast.
 * **Inexact stats (stddev/corr/percentile)** — no exact path; round both
   sides coarsely enough that the cross-engine error (≤1e-9 relative) cannot
   straddle a rounding boundary in practice.
@@ -61,7 +65,7 @@ def _jvm_handles(spark) -> tuple:
     return handles
 
 
-def _unscaled(c: Column) -> Column:
+def _unscaled(spark, c: Column) -> Column:
     """UnscaledValue(c) — the decimal's unscaled long, zero-copy for
     compact decimals (precision ≤ 18). Catalyst-internal expression,
     stable across Spark 3.x/4.x, reached through the classic-mode
@@ -70,10 +74,9 @@ def _unscaled(c: Column) -> Column:
     The reflective py4j class lookups cost ~ms each, so the handles are
     cached per live SparkSession (plan-build time is part of every
     registered query's bench cost)."""
-    from pyspark.sql import SparkSession
     from pyspark.sql.classic.column import Column as _CCol
 
-    eu, uv = _jvm_handles(SparkSession.getActiveSession())
+    eu, uv = _jvm_handles(spark)
     return _CCol(eu.column(uv(eu.expression(c._jc))))
 
 
@@ -87,58 +90,117 @@ def dsum_wide(expr: Column | str) -> Column:
     return F.sum(c.cast(DSCALE)).cast("double")
 
 
-_DSUM_MEMO: dict[str, Column] = {}
-_CONST_MEMO: dict[str, Column] = {}
+# session -> {input repr: built dsum Column} and {constant: Column}, held
+# weakly so a session's built Columns die with it.
+_DSUM_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_CONST_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def _const(val: str, dtype: str) -> Column:
+def _session_memo(memo: weakref.WeakKeyDictionary, spark) -> dict:
+    if spark is None:
+        return {}  # no active session: build without memoizing
+    entries = memo.get(spark)
+    if entries is None:
+        entries = memo[spark] = {}
+    return entries
+
+
+def _const(spark, val: str, dtype: str) -> Column:
+    consts = _session_memo(_CONST_MEMO, spark)
     key = f"{val}:{dtype}"
-    c = _CONST_MEMO.get(key)
+    c = consts.get(key)
     if c is None:
-        c = F.lit(int(val)).cast(dtype)
-        _CONST_MEMO[key] = c
+        c = consts[key] = F.lit(int(val)).cast(dtype)
     return c
+
+
+# Fast-path bounds for the per-row rounding (see _micro_units): below
+# _FAST_CAP, |x·1e6| < 2^50; a row whose y = x·1e6 lies within
+# _TIE_REL·|y| + _TIE_ABS of the half-integer above floor(y) is treated
+# as a possible tie.
+_FAST_CAP = 1e9
+_TIE_REL = 1e-15
+_TIE_ABS = 1e-9
+
+
+def _micro_units(spark, c: Column) -> tuple[Column, Column]:
+    """``(fast, u)``: the per-row unscaled micro-units
+    ``u = round_half_up(x·10⁶)`` of CAST(x AS DECIMAL(18,6)), and the
+    predicate that selects its double-arithmetic branch.
+
+    The cast rounds a decimal string ``s`` of ``x`` with
+    ``|s − x| ≤ ulp(x)/2``, and ``y = x·10⁶`` is within ``ulp(y)/2`` of the
+    exact product, so ``|y − s·10⁶| ≤ ~1.5·2⁻⁵²·|y| ≈ 3.3e-16·|y|``. When
+    ``y`` lies farther than ``|y|·1e-15 + 1e-9`` (3× that bound, plus room
+    for the rounding of the test itself) from the half-integer above
+    ``floor(y)``, both round to the same integer, and HALF_UP differs from
+    round-to-nearest only at ties, so ``floor(y + 0.5)`` equals the cast.
+    ``|x| < 1e9`` keeps ``|y| < 2⁵⁰``, where ``floor(y)`` is an exact
+    double and ``y − floor(y) − 0.5`` and ``y + 0.5`` are exact or off by
+    at most ~2⁻⁵³, which the ``1e-9`` term absorbs; it comes first in the
+    short-circuit ``&`` so ``floor`` never sees a huge value. Every other
+    row — near a tie, ``|x| ≥ 1e9``, null, NaN, ±inf — takes the cast."""
+    y = c * 1e6
+    fast = (F.abs(c) < _FAST_CAP) & (
+        F.abs(y - F.floor(y) - 0.5) > F.abs(y) * _TIE_REL + _TIE_ABS
+    )
+    u = F.when(fast, F.floor(y + 0.5)).otherwise(
+        _unscaled(spark, c.cast("decimal(18,6)"))
+    )
+    return fast, u
 
 
 def dsum(expr: Column | str) -> Column:
     """Order-independent, cross-engine-exact SUM of a double expression.
 
-    Split-long fast path (opt r15, guide §1.2 per-task work): the per-row
-    value still rounds through CAST(x AS DECIMAL(18,6)) — identical
-    half-up rounding to the (27,6) oracle mirror for every |x| < 1e12 —
-    but the SUM runs as two compact LONG sums over the split unscaled
-    value instead of one DECIMAL(37,6) buffer whose precision (> 18)
-    forces BigDecimal serde per row. Exact reconstruction + final decimal
-    divide reproduce CAST(SUM(...) AS DOUBLE) bit-identically (measured
-    BITEXACT on the Q1 shape; 1.17 s → 0.65 s for 5 sums over 600 k rows).
-    Out-of-bounds groups RAISE (never a silent wrap/null): callers with
-    per-row magnitudes ≥ 1e12 use :func:`dsum_wide`.
+    Each row rounds half-up to ``u = round_half_up(x·10⁶)`` micro-units,
+    the unscaled value of CAST(x AS DECIMAL(18,6)) — identical to the
+    (27,6) oracle mirror for every |x| < 1e12. :func:`_micro_units` takes
+    ``u = floor(x·10⁶ + 0.5)`` in double arithmetic when ``|x| < 1e9`` and
+    ``x·10⁶`` is more than ``|x·10⁶|·1e-15 + 1e-9`` from a tie; the
+    rounding error of the double product and of the cast's decimal string
+    is at most ~3.3e-16·|x·10⁶|, so such a row rounds the same either way.
+    Ties, |x| ≥ 1e9 (where |x·10⁶| can pass 2⁵⁰ and the tie test loses
+    its exactness), null, NaN and ±inf take the cast, which costs a
+    ``Double.toString`` and a BigDecimal per row.
 
-    The built Column memoizes on the input expression's repr: the ~36
-    Column ops cost ~50 ms of py4j roundtrips per construction, paid by
-    EVERY registered-query invocation (plans rebuild per run). Safe
-    because every call site passes anchor-free expressions (strings /
-    F.col trees — audited r15): the memoized tree is unresolved and
-    resolves per-plan exactly like a fresh build.
+    The SUM runs as two compact LONG sums over the split unscaled value
+    (hi = u >> 20, lo = u − hi·2²⁰) instead of one DECIMAL(37,6) buffer
+    whose precision (> 18) forces BigDecimal serde per row. Exact
+    reconstruction + final decimal divide reproduce CAST(SUM(...) AS
+    DOUBLE) bit-identically. Out-of-bounds groups RAISE (never a silent
+    wrap/null): callers with per-row magnitudes ≥ 1e12 use
+    :func:`dsum_wide`.
+
+    The built Column memoizes per active session on the input
+    expression's repr: the ~50 Column ops cost tens of ms of py4j
+    roundtrips per construction, paid by EVERY registered-query
+    invocation (plans rebuild per run). Safe because every call site
+    passes anchor-free expressions (strings / F.col trees): the memoized
+    tree is unresolved and resolves per-plan exactly like a fresh build.
     """
+    from pyspark.sql import SparkSession
+
     c = F.col(expr) if isinstance(expr, str) else expr
+    spark = SparkSession.getActiveSession()
+    memo = _session_memo(_DSUM_MEMO, spark)
     key = str(c)
-    memo = _DSUM_MEMO.get(key)
-    if memo is not None:
-        return memo
+    built = memo.get(key)
+    if built is not None:
+        return built
     try:
-        u = _unscaled(c.cast("decimal(18,6)"))
+        _, u = _micro_units(spark, c)
     except Exception:
         return dsum_wide(c)  # no classic JVM bridge: plain decimal path
     hi = F.shiftright(u, 20)
-    lo = u - hi * _const(str(_SPLIT), "long")
+    lo = u - hi * _const(spark, str(_SPLIT), "long")
     tot = (
         F.sum(hi).cast("decimal(32,0)")
-        * _const(str(_SPLIT), "decimal(7,0)")
+        * _const(spark, str(_SPLIT), "decimal(7,0)")
         + F.sum(lo).cast("decimal(20,0)")
     )
     val = (
-        tot.cast("decimal(38,6)") / _const("1000000", "decimal(7,0)")
+        tot.cast("decimal(38,6)") / _const(spark, "1000000", "decimal(7,0)")
     ).cast("double")
     n = F.count(c).cast("double")
     mx = F.max(F.abs(c))
@@ -155,7 +217,7 @@ def dsum(expr: Column | str) -> Column:
             )
         )
     )
-    _DSUM_MEMO[key] = out
+    memo[key] = out
     return out
 
 
