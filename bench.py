@@ -47,16 +47,8 @@ def main() -> None:
     from trireme_spark import registry
     from trireme_spark.session import get_spark
 
-    # Shuffle width 32 (r15 A/B, guide §2.2): the r14 2×-cores rule (64 on
-    # local[32]) lost every cold driver-methodology trial (8.39-9.20 s @ 32
-    # vs 9.24-9.61 s @ 64) — at sf0.1 the extra reduce tasks are pure
-    # scheduling overhead. prep() re-applies the same width per query;
-    # TRIREME_SHUFFLE_WIDTH parameterises cluster-scale values.
-    spark = get_spark(
-        "trireme-bench",
-        cpus=cpus,
-        shuffle_partitions=int(os.environ.get("TRIREME_SHUFFLE_WIDTH") or 32),
-    )
+    # Shuffle width: session.shuffle_width(), the width prep() applies.
+    spark = get_spark("trireme-bench", cpus=cpus)
 
     keys = [k for k in HEADLINE if k in registry.QUERIES]
     def run(key: str) -> None:

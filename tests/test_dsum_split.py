@@ -137,6 +137,16 @@ def test_session_caches_are_per_session_object(spark):
         spark.createDataFrame([(1,)], "x int")  # ``spark`` active again
 
 
+def test_prep_rejects_malformed_shuffle_width(spark, monkeypatch):
+    """prep() reads the width get_spark defaults to; a malformed value
+    raises there too instead of silently keeping the session's width."""
+    from trireme_spark import session
+
+    monkeypatch.setenv("TRIREME_SHUFFLE_WIDTH", "abc")
+    with pytest.raises(ValueError):
+        session.prep(spark)
+
+
 def _fast_path_values() -> list[float]:
     """Adversarial doubles for the per-row rounding, all |x| < 9.99e11."""
     vals = []

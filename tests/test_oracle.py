@@ -14,13 +14,11 @@ from tests.conftest import SF_SMOKE, assert_matches_oracle
 from trireme_spark import registry
 
 
-
-pytestmark = pytest.mark.slow  # opt-in battery (r15): run with -m "" or -m slow
-
 def _keys():
     return sorted(registry.QUERIES)
 
 
+@pytest.mark.slow  # opt-in battery: run with -m "" or -m slow
 @pytest.mark.parametrize("key", _keys())
 def test_oracle_parity(spark, key):
     fn = registry.QUERIES[key]
@@ -60,6 +58,110 @@ def test_sweep_priority_covers_registry_exactly():
     extra = set(registry.QUERIES) - set(_SWEEP_PRIORITY)
     assert not missing, f"priority entries not in registry: {missing}"
     assert not extra, f"registered keys not in the priority list: {extra}"
+
+
+# The parked lot: 40 query functions built for the staging cadence and
+# never registered. Each still carries its own staging tests
+# (tests/test_staged_r15*.py, tests/test_staged_r16*.py). The set may only
+# shrink: deleting a parked key (with its tests) or registering it removes
+# its name here.
+_PARKED = frozenset(
+    {
+        "agg_cochran_q",
+        "orders_rank_biserial",
+        "agg_fisher_exact_2x2",
+        "agg_youden_j_threshold",
+        "sample_kish_design_effect",
+        "agg_wilcoxon_signed_rank",
+        "agg_bartlett_test",
+        "agg_welch_anova",
+        "agg_mood_median_test",
+        "agg_partial_correlation",
+        "agg_icc_oneway",
+        "agg_bhattacharyya_distance",
+        "agg_jonckheere_terpstra",
+        "graph_clustering_coefficient",
+        "graph_rich_club_coefficient",
+        "graph_katz_truncated",
+        "sim_ann_recall_eval",
+        "embed_cka_linear",
+        "text_mattr_diversity",
+        "text_kneser_ney_bigram",
+        "ts_variance_ratio_test",
+        "ts_turning_points_test",
+        "orders_page_hinkley",
+        "ts_hurst_exponent",
+        "events_littles_law_check",
+        "sample_bottomk_hash",
+        "orders_expected_shortfall",
+        "events_spc_p_chart",
+        "ts_arch_lm_test",
+        "events_slo_burn_rate",
+        "events_cmh_test",
+        "events_cochran_armitage_trend",
+        "events_burstiness_goh",
+        "sample_horvitz_thompson",
+        "orders_theil_u2_forecast",
+        "ts_cointegration_engle_granger",
+        "ts_forecast_theta_method",
+        "events_brier_decomposition",
+        "orders_zero_inflation_score",
+        "lineitem_bullwhip_ratio",
+    }
+)
+
+
+def test_no_unregistered_query_functions():
+    """A public top-level ``fn(spark, sf_dir)`` in ``queries/`` is a query
+    key. Unless ``@register`` puts it in the registry (or other package
+    code calls it as a helper), the driver never sees it and it is dead
+    weight: build, review and test cost with no graded behaviour. Only
+    the parked lot in ``_PARKED`` is exempt, and no new name may join it."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(registry.__file__).parent
+
+    def name_of(node):
+        if isinstance(node, ast.Call):
+            node = node.func
+        if isinstance(node, ast.Attribute):
+            return node.attr
+        return node.id if isinstance(node, ast.Name) else None
+
+    candidates = {}
+    callers: dict[str, set[str]] = {}
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            scope = f"{path}:{getattr(top, 'name', top.lineno)}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    callers.setdefault(name_of(node), set()).add(scope)
+            if (
+                path.parent.name == "queries"
+                and isinstance(top, ast.FunctionDef)
+                and not top.name.startswith("_")
+                and [a.arg for a in top.args.args[:2]] == ["spark", "sf_dir"]
+                and "register" not in map(name_of, top.decorator_list)
+            ):
+                candidates[top.name] = scope
+    unused = {
+        name: scope
+        for name, scope in candidates.items()
+        if not callers.get(name, set()) - {scope}
+    }
+    orphans = sorted(
+        scope.rsplit("/", 1)[-1]
+        for name, scope in unused.items()
+        if name not in _PARKED
+    )
+    assert not orphans, (
+        f"query functions neither registered nor called: {orphans} — "
+        "register them with @register(key, oracle=...) or delete them"
+    )
+    stale = sorted(_PARKED - set(unused))
+    assert not stale, f"no longer parked, drop from _PARKED: {stale}"
 
 
 # Every key that legitimately has no DuckDB oracle lives in the declared

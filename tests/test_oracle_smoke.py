@@ -5,7 +5,9 @@ The full-registry parity battery (``test_oracle.py``) is opt-in (``slow``);
 these keys cover a key of each query module, connected components, the
 migration writes and all twelve ``bench.py`` keys, so a wrong answer from a
 shared layer (the fixture reads, the connectors, the session confs, the
-exact-decimal sums) fails the default run.
+exact-decimal sums) fails the default run. ``sim_knn_per_query`` rides
+along: it is the exact side the rows-only ANN keys' recall tests compare
+against.
 """
 
 from __future__ import annotations
@@ -17,7 +19,11 @@ from perfbench.workloads import WORKLOADS
 from tests.conftest import SF_SMOKE, assert_matches_oracle
 from trireme_spark import registry
 
-KEYS = sorted({k for w in WORKLOADS.values() for k in w.keys} | set(HEADLINE))
+KEYS = sorted(
+    {k for w in WORKLOADS.values() for k in w.keys}
+    | set(HEADLINE)
+    | {"sim_knn_per_query"}
+)
 
 
 @pytest.mark.parametrize("key", KEYS)

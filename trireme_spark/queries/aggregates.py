@@ -3380,12 +3380,10 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_woe_information_value — staged r11, REGISTERED r12 (cadence
-# batch; SURVEY round-11 log). Weight-of-Evidence / Information Value
+# agg_woe_information_value — Weight-of-Evidence / Information Value
 # feature screening — the credit-scoring / churn-model staple that ranks
 # candidate features by how well their bins separate a binary label,
-# BEFORE any model is fit. Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# BEFORE any model is fit.
 # ---------------------------------------------------------------------------
 
 _WOE_IV_ORACLE = """
@@ -3516,12 +3514,10 @@ def agg_woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_gini_split_gain — staged r11, REGISTERED r12 (cadence batch;
-# SURVEY round-11 log). Decision-tree split screening: Gini impurity
+# agg_gini_split_gain — Decision-tree split screening: Gini impurity
 # reduction of candidate threshold splits on a numeric feature against a
 # binary label — the CART criterion, and WoE/IV's tree-side sibling in the
-# feature-engineering family. Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# feature-engineering family.
 # ---------------------------------------------------------------------------
 
 _GINI_THRESHOLDS = [50_000 * k for k in range(1, 10)]  # 50k … 450k
@@ -3683,14 +3679,11 @@ def agg_gini_split_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_tukey_hsd — staged r11, REGISTERED r12 (cadence batch; SURVEY
-# round-11 log). Tukey-Kramer honestly-significant-difference post-hoc:
-# agg_anova_oneway says WHETHER priority explains price variance — HSD says
-# WHICH priority pairs actually differ, with the studentized-range
+# agg_tukey_hsd — Tukey-Kramer honestly-significant-difference post-hoc:
+# agg_anova_oneway says WHETHER priority explains price variance — HSD
+# says WHICH priority pairs actually differ, with the studentized-range
 # correction that keeps the familywise error at 5% across all 10 pairwise
-# comparisons (10 naive t-tests at 5% each would not). Flipped at the
-# start of r12: decorator + _SWEEP_PRIORITY slot added per the written
-# recipe (SURVEY round-12 log).
+# comparisons (10 naive t-tests at 5% each would not).
 # ---------------------------------------------------------------------------
 
 _TUKEY_Q_CRIT = 3.858  # studentized range q(k=5, df=inf) at 5% — pinned
@@ -3791,13 +3784,11 @@ def agg_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# lineitem_fe_within_regression — staged r11, REGISTERED r12 (cadence
-# batch; SURVEY round-11 log). Two-way fixed-effects (within) estimator:
-# the workhorse panel regression — demean by entity AND time, regress the
-# residuals — which identifies the discount→quantity slope from variation
-# WITHIN each part and month, immune to any part-level or month-level
-# confounder. Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# lineitem_fe_within_regression — Two-way fixed-effects (within)
+# estimator: the workhorse panel regression — demean by entity AND time,
+# regress the residuals — which identifies the discount→quantity slope
+# from variation WITHIN each part and month, immune to any part-level or
+# month-level confounder.
 # ---------------------------------------------------------------------------
 
 _FE_WITHIN_ORACLE = """
@@ -3941,13 +3932,10 @@ def lineitem_fe_within_regression(
 
 
 # ---------------------------------------------------------------------------
-# agg_target_encoding_kfold — STAGED for the r13 cadence (parked
-# unregistered; SURVEY continuation log). Leakage-safe mean-target
-# encoding: the category encoder every tabular-ML pipeline ships, with the
-# out-of-fold trick that keeps a row's own target out of its feature (the
-# difference between an encoder and a label leak). Flip recipe: add
-# @register("agg_target_encoding_kfold", oracle=_TARGET_ENC_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# agg_target_encoding_kfold — Leakage-safe mean-target encoding: the
+# category encoder every tabular-ML pipeline ships, with the out-of-fold
+# trick that keeps a row's own target out of its feature (the difference
+# between an encoder and a label leak).
 # ---------------------------------------------------------------------------
 
 _TE_FOLDS = 5
@@ -4059,13 +4047,10 @@ def agg_target_encoding_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_kruskal_wallis — STAGED for the r13 cadence (parked unregistered;
-# SURVEY continuation log). Kruskal-Wallis H: the k-group rank ANOVA —
+# agg_kruskal_wallis — Kruskal-Wallis H: the k-group rank ANOVA —
 # orders_mannwhitney_u's 2-group machinery generalized to all five order
 # priorities, answering agg_anova_oneway's question without its normality
-# assumption. Flip recipe: add
-# @register("agg_kruskal_wallis", oracle=_KRUSKAL_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# assumption.
 # ---------------------------------------------------------------------------
 
 _KW_CHI2_CRIT = 9.488  # chi-square(4) at 5% — pinned literal
@@ -4218,13 +4203,10 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_brown_forsythe — STAGED for the r13 cadence (parked unregistered;
-# SURVEY continuation log). Brown-Forsythe variance-homogeneity test: the
+# agg_brown_forsythe — Brown-Forsythe variance-homogeneity test: the
 # median-based Levene — ANOVA's equal-variance ASSUMPTION, tested before
 # trusting agg_anova_oneway/agg_tukey_hsd, with the median centering that
-# keeps the test honest under heavy tails. Flip recipe: add
-# @register("agg_brown_forsythe", oracle=_BROWN_FORSYTHE_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# keeps the test honest under heavy tails.
 # ---------------------------------------------------------------------------
 
 _BF_F_CRIT = 2.372  # F(4, inf) at 5% — pinned literal
@@ -4370,19 +4352,17 @@ def agg_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_confusion_mcc — STAGED for the r13 cadence (parked unregistered;
-# SURVEY round-12 log). The binary-classifier scorecard in one corpus
-# pass: confusion matrix + accuracy/precision/recall/F1 + Matthews
-# correlation coefficient. MCC is the one single-number summary that
-# stays honest under class imbalance (Chicco & Jurman 2020) — accuracy
-# and F1 both saturate when one class dominates, which is exactly the
-# regime of quality-filter/contamination classifiers over a 100 TB
-# corpus. Completes the agreement family: kappa (chance-corrected
-# agreement), McNemar (paired disagreement direction), odds ratio
-# (association), MCC (correlation of the confusion matrix itself).
-# Predictor under eval: "high order priority (1-2) predicts fulfilled
-# status 'F'" — a deliberately weak rule; the scorecard's job is to
-# SAY so, not to win.
+# agg_confusion_mcc — The binary-classifier scorecard in one corpus pass:
+# confusion matrix + accuracy/precision/recall/F1 + Matthews correlation
+# coefficient. MCC is the one single-number summary that stays honest
+# under class imbalance (Chicco & Jurman 2020) — accuracy and F1 both
+# saturate when one class dominates, which is exactly the regime of
+# quality-filter/contamination classifiers over a 100 TB corpus. Completes
+# the agreement family: kappa (chance-corrected agreement), McNemar
+# (paired disagreement direction), odds ratio (association), MCC
+# (correlation of the confusion matrix itself). Predictor under eval:
+# "high order priority (1-2) predicts fulfilled status 'F'" — a
+# deliberately weak rule; the scorecard's job is to SAY so, not to win.
 # ---------------------------------------------------------------------------
 
 _MCC_ORACLE = """
@@ -4492,16 +4472,15 @@ def agg_confusion_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# orders_score_lift_table — STAGED for the r13 cadence (parked
-# unregistered; SURVEY round-12 log). Gains/lift table for a scoring rule
-# (customer account balance predicting "has an urgent order"): the
-# model-eval readout every targeting/campaign pipeline prints before
-# deploying a ranker — per band: response rate, lift over base rate,
-# cumulative capture. Bands are FIXED-WIDTH over the observed score range
-# (the WoE/gini binning discipline — no percentile/NTILE, so no
-# corpus-grain global sort and no cross-engine tie hazard); a decile-by-
-# rank variant would need the win_topk_with_ties two-pass rank machinery
-# for no extra statistical content.
+# orders_score_lift_table — Gains/lift table for a scoring rule (customer
+# account balance predicting "has an urgent order"): the model-eval
+# readout every targeting/campaign pipeline prints before deploying a
+# ranker — per band: response rate, lift over base rate, cumulative
+# capture. Bands are FIXED-WIDTH over the observed score range (the
+# WoE/gini binning discipline — no percentile/NTILE, so no corpus-grain
+# global sort and no cross-engine tie hazard); a decile-by- rank variant
+# would need the win_topk_with_ties two-pass rank machinery for no extra
+# statistical content.
 # ---------------------------------------------------------------------------
 
 _LIFT_BANDS = 10
@@ -4638,13 +4617,12 @@ def orders_score_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# orders_permutation_test — STAGED for the r13 cadence (parked
-# unregistered; SURVEY round-12 log). Hash-randomization test for the
-# urgent-vs-rest difference in mean order value — the RESAMPLING member of
-# the inference family (rank-based: mannwhitney/kruskal; parametric:
-# welch/anova; resampling: this). B deterministic pseudo-randomizations of
-# the group label, each preserving the observed arm share in expectation
-# (the UNCONDITIONAL randomization test — Bernoulli reassignment, not the
+# orders_permutation_test — Hash-randomization test for the urgent-vs-rest
+# difference in mean order value — the RESAMPLING member of the inference
+# family (rank-based: mannwhitney/kruskal; parametric: welch/anova;
+# resampling: this). B deterministic pseudo-randomizations of the group
+# label, each preserving the observed arm share in expectation (the
+# UNCONDITIONAL randomization test — Bernoulli reassignment, not the
 # conditional fixed-margins permutation; asymptotically equivalent, stated
 # honestly, and the only variant with a one-pass distributed form).
 # ---------------------------------------------------------------------------
@@ -4877,8 +4855,7 @@ def orders_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_tail_dependence — STAGED for the r13 cadence (parked unregistered;
-# SURVEY round-12 log). Empirical upper-tail dependence between daily
+# agg_tail_dependence — Empirical upper-tail dependence between daily
 # order VOLUME and daily AVERAGE order value: λ_U(q) = P(Y in its top
 # (1−q) tail | X in its top (1−q) tail) at q ∈ {0.75, 0.9, 0.95} — the
 # copula-diagnostics number that says whether extremes CO-OCCUR.
@@ -4985,9 +4962,8 @@ def agg_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_cohens_effect_size — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-12 log). Cohen's d + Hedges' g for the weekend-vs-weekday
-# order-value split — the EFFECT-SIZE companion to
+# agg_cohens_effect_size — Cohen's d + Hedges' g for the
+# weekend-vs-weekday order-value split — the EFFECT-SIZE companion to
 # orders_weekend_welch_ttest (same grouping, same sufficient statistics):
 # the t-test says whether a difference exists, d says whether anyone
 # should care (at corpus n, trivially tiny effects are "significant" —
@@ -5106,8 +5082,7 @@ def agg_cohens_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_friedman_test — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-12 log). Friedman's blocked rank test over the five order
+# agg_friedman_test — Friedman's blocked rank test over the five order
 # priorities with calendar months as blocks: the REPEATED-MEASURES mate of
 # agg_kruskal_wallis (independent groups) — by ranking WITHIN each month
 # it removes the between-month level shifts (seasonality, growth) that
@@ -5255,14 +5230,13 @@ def agg_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# orders_auc_roc — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-12 log). Exact tie-corrected ROC AUC for "account balance
+# orders_auc_roc — Exact tie-corrected ROC AUC for "account balance
 # predicts urgent-order customer" — the threshold-free ranking-quality
-# number completing the round's eval family next to the SAME score/label
-# pair's lift table (orders_score_lift_table): AUC via the rank-sum
-# identity AUC = (R₁ − n₁(n₁+1)/2)/(n₁n₀) on midrank-tied ranks — the
-# Mann-Whitney machinery re-read as classifier eval — plus Gini
-# (= 2·AUC − 1) and the Hanley-McNeil CI.
+# number completing the eval family next to the SAME score/label pair's
+# lift table (orders_score_lift_table): AUC via the rank-sum identity AUC
+# = (R₁ − n₁(n₁+1)/2)/(n₁n₀) on midrank-tied ranks — the Mann-Whitney
+# machinery re-read as classifier eval — plus Gini (= 2·AUC − 1) and the
+# Hanley-McNeil CI.
 # ---------------------------------------------------------------------------
 
 _AUC_ORACLE = """
@@ -5399,15 +5373,14 @@ def orders_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# orders_jarque_bera_normality — STAGED for the r14 cadence (parked
-# unregistered; SURVEY round-13 log). Jarque-Bera normality test on
+# orders_jarque_bera_normality — Jarque-Bera normality test on
 # o_totalprice: the DISTRIBUTIONAL-SHAPE gate the parametric inference
-# family assumes away — welch/cohens_d lean on CLT normality of means,
-# and JB is the one-pass moment test that says whether the underlying
+# family assumes away — welch/cohens_d lean on CLT normality of means, and
+# JB is the one-pass moment test that says whether the underlying
 # distribution is anywhere near normal (the fixture's totalprice is
 # near-uniform — strongly platykurtic, excess kurtosis ≈ −1.2 — so the
-# test correctly screams — a useful referee for "should I have used
-# the rank tests instead").
+# test correctly screams — a useful referee for "should I have used the
+# rank tests instead").
 # ---------------------------------------------------------------------------
 
 _JB_CRIT = 5.991465  # chi^2(2) 95th percentile
@@ -5548,13 +5521,12 @@ def orders_jarque_bera_normality(
 
 
 # ---------------------------------------------------------------------------
-# agg_cronbach_alpha — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-13 log). Cronbach's α over the (month × priority)
-# revenue panel: internal-consistency reliability — do the five
-# priority "items" move together month to month? The scale-reliability
-# member of the agreement family (fleiss κ grades raters on nominal
-# labels, the annotator key grades pairwise agreement, α grades a
-# k-item score the way every survey/metric-panel methodology does).
+# agg_cronbach_alpha — Cronbach's α over the (month × priority) revenue
+# panel: internal-consistency reliability — do the five priority "items"
+# move together month to month? The scale-reliability member of the
+# agreement family (fleiss κ grades raters on nominal labels, the
+# annotator key grades pairwise agreement, α grades a k-item score the way
+# every survey/metric-panel methodology does).
 # ---------------------------------------------------------------------------
 
 _CRONBACH_K = 5  # the five order priorities (complete blocks only)

@@ -1607,7 +1607,7 @@ def fn_fiscal_445(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- fn_json_variant (staged r10, REGISTERED r11 per the flip recipe) -----
+# --- fn_json_variant ------------------------------------------------------
 # Built + oracle-verified while registration was paused (rounds 9-10);
 # the r11 flip added the decorator below and a _SWEEP_PRIORITY slot.
 # Contract (SURVEY round-8 log "Parked"): VariantType surface with TYPE
@@ -1740,7 +1740,7 @@ def fn_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- fn_variant_nested_paths (staged r10, REGISTERED r11) -----------------
+# --- fn_variant_nested_paths ----------------------------------------------
 # Same staging history as fn_json_variant above: built + oracle-verified
 # under the registration pause, decorator flipped in r11. Complements
 # fn_json_variant (scalar leaf classification) with the NESTED half of the
@@ -2068,12 +2068,9 @@ def fn_variant_schema_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# fn_ipv4_cidr — staged r11, REGISTERED r12 (cadence batch; SURVEY
-# round-11 log). IPv4 parsing + longest-prefix-match CIDR classification —
+# fn_ipv4_cidr — IPv4 parsing + longest-prefix-match CIDR classification —
 # the network-function surface (octet math, prefix containment, LPM) that
 # every clickstream/geo-enrichment pipeline runs before any analytics.
-# Flipped at the start of r12: decorator + _SWEEP_PRIORITY slot added
-# per the written recipe (SURVEY round-12 log).
 # ---------------------------------------------------------------------------
 
 # (cidr, network-as-uint32, prefix-len). Overlapping by design: every IP
@@ -2206,8 +2203,7 @@ def fn_ipv4_cidr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# fn_iban_mod97 — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-12 log). ISO 7064 MOD-97-10 check-digit computation and
+# fn_iban_mod97 — ISO 7064 MOD-97-10 check-digit computation and
 # validation on synthesized DE IBANs — the banking sibling of
 # fn_luhn_checksum (cards): the rearranged digit string is a 22-digit
 # integer, far past 2^63, so the mod folds CHUNKWISE via the identity

@@ -427,13 +427,11 @@ def geo_nearest_facility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# geo_geohash_encode — staged r11, REGISTERED r12 (cadence batch;
-# SURVEY round-11 log). Geohash cell encoding (Niemeyer's bit-interleaved
+# geo_geohash_encode — Geohash cell encoding (Niemeyer's bit-interleaved
 # base32 grid) — the spatial BUCKETING primitive: once points carry a cell
 # id, proximity joins become equi-joins on (cell, neighbors) instead of
-# all-pairs haversine, which is exactly the grid path geo_nearest_facility's
-# docstring names for corpus-sized facility tables. Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# all-pairs haversine, which is exactly the grid path
+# geo_nearest_facility's docstring names for corpus-sized facility tables.
 # ---------------------------------------------------------------------------
 
 _GH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
@@ -555,8 +553,7 @@ def geo_geohash_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# geo_point_in_polygon — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-13 log). Ray-casting point-in-polygon over the planted
+# geo_point_in_polygon — Ray-casting point-in-polygon over the planted
 # customer coordinates against a FIXED literal polygon: the geofencing
 # primitive (service areas, sanctioned regions, delivery zones) the geo
 # family was missing — the radius join answers "near a point", this

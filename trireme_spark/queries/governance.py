@@ -278,14 +278,11 @@ def etl_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# etl_invoice_reconciliation — STAGED for the r13 cadence (parked
-# unregistered; SURVEY continuation log). Header-vs-detail two-way match:
-# does each order's header total reconcile against the sum of its line
-# items — the close-the-books control that runs nightly in every finance
-# warehouse, with tolerance BANDS (exact / rounding / material) rather
-# than a boolean. Flip recipe: add
-# @register("etl_invoice_reconciliation", oracle=_RECON_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# etl_invoice_reconciliation — Header-vs-detail two-way match: does each
+# order's header total reconcile against the sum of its line items — the
+# close-the-books control that runs nightly in every finance warehouse,
+# with tolerance BANDS (exact / rounding / material) rather than a
+# boolean.
 # ---------------------------------------------------------------------------
 
 _RECON_ORACLE = """

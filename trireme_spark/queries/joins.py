@@ -1663,7 +1663,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- graph_label_propagation (staged r10, REGISTERED r11) ------------------
+# --- graph_label_propagation -----------------------------------------------
 # Same staging history as fn_json_variant (functions_scalar.py): built +
 # oracle-verified under the registration pause, decorator flipped in r11.
 # Fills the community-DETECTION gap in the graph family (modularity_score
@@ -1960,13 +1960,10 @@ def graph_two_hop_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# graph_adamic_adar — staged r11, REGISTERED r12 (cadence batch;
-# SURVEY round-11 log). Adamic-Adar link prediction on the copurchase
-# graph: the frequency-weighted refinement of graph_jaccard_links' common-
+# graph_adamic_adar — Adamic-Adar link prediction on the copurchase graph:
+# the frequency-weighted refinement of graph_jaccard_links' common-
 # neighbor count — a shared RARE neighbor is worth more than a shared hub
 # (Adamic & Adar 2003), which is why AA beats Jaccard on power-law graphs.
-# Flipped at the start of r12: decorator + _SWEEP_PRIORITY slot added
-# per the written recipe (SURVEY round-12 log).
 # ---------------------------------------------------------------------------
 
 _ADAMIC_ADAR_ORACLE = """
@@ -2119,15 +2116,14 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# graph_bipartite_hits — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-12 log). HITS (Kleinberg 1999) on the bipartite
-# customer→part purchase graph, 3 unrolled iterations: authorities =
-# parts bought by the best hub-customers, hubs = customers who buy the
-# best authority-parts — the mutually-recursive centrality PageRank's
-# single-score random walk cannot express, and the classic
-# query-dependent ranking primitive. L1 normalization per half-step
-# (a documented HITS variant — same fixed point direction as L2, and
-# expressible as exact integer arithmetic cross-engine).
+# graph_bipartite_hits — HITS (Kleinberg 1999) on the bipartite
+# customer→part purchase graph, 3 unrolled iterations: authorities = parts
+# bought by the best hub-customers, hubs = customers who buy the best
+# authority-parts — the mutually-recursive centrality PageRank's
+# single-score random walk cannot express, and the classic query-dependent
+# ranking primitive. L1 normalization per half-step (a documented HITS
+# variant — same fixed point direction as L2, and expressible as exact
+# integer arithmetic cross-engine).
 # ---------------------------------------------------------------------------
 
 _HITS_ITERS = 3

@@ -2446,14 +2446,12 @@ def embed_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# dedup_sorted_neighborhood — staged r11, REGISTERED r12 (cadence
-# batch; SURVEY round-11 log). Sorted-Neighborhood blocking (Hernandez &
+# dedup_sorted_neighborhood — Sorted-Neighborhood blocking (Hernandez &
 # Stolfo 1995): the THIRD blocking paradigm in the dedup family, next to
-# hash-bucket blocking (minhash bands, simhash chunks) and symmetric-delete
-# neighborhoods (dedup_fuzzy_names) — sort on a blocking key, compare each
-# record only to the w-1 records that FOLLOW it in sort order. Flip recipe:
-# add @register("dedup_sorted_neighborhood", oracle=_SNM_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# hash-bucket blocking (minhash bands, simhash chunks) and
+# symmetric-delete neighborhoods (dedup_fuzzy_names) — sort on a blocking
+# key, compare each record only to the w-1 records that FOLLOW it in sort
+# order.
 # ---------------------------------------------------------------------------
 
 _SNM_WINDOW = 3  # each record meets the 2 records after it
@@ -2537,14 +2535,11 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# embed_knn_label_eval — STAGED for the r13 cadence (parked unregistered;
-# SURVEY continuation log). Leave-one-out k-NN label evaluation: how
+# embed_knn_label_eval — Leave-one-out k-NN label evaluation: how
 # predictive is the embedding space of the label column — the
 # embedding-quality probe (kNN accuracy) every retrieval/clustering report
 # quotes before trusting the space, built on the SAME exact graph operator
-# sim_knn_graph_all materializes. Flip recipe: add
-# @register("embed_knn_label_eval", oracle=_KNN_EVAL_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# sim_knn_graph_all materializes.
 # ---------------------------------------------------------------------------
 
 _KNN_EVAL_ORACLE = f"""
@@ -2651,16 +2646,15 @@ def embed_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# dedup_lsh_eval — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-12 log). The dedup family's REFEREE: the measured
-# recall / candidate-precision / verification-cost OPERATING CURVE of the
+# dedup_lsh_eval — The dedup family's REFEREE: the measured recall /
+# candidate-precision / verification-cost OPERATING CURVE of the
 # MinHash-LSH candidate generator across three band shapes, against the
 # EXACT Jaccard truth set — the table a capacity plan actually reads when
-# picking the band shape for a 100 TB run. ROWS-ONLY at flip: the
-# signatures ride Spark's xxhash64 (no DuckDB mirror — the sim_ann_lsh
-# precedent); the pytest contract pins determinism, the confusion-count
-# identities per row, truth-set equality with the ORACLED l5 key, and
-# the S-curve ordering across shapes.
+# picking the band shape for a 100 TB run. ROWS-ONLY: the signatures ride
+# Spark's xxhash64 (no DuckDB mirror — the sim_ann_lsh precedent); the
+# pytest contract pins determinism, the confusion-count identities per
+# row, truth-set equality with the ORACLED l5 key, and the S-curve
+# ordering across shapes.
 # ---------------------------------------------------------------------------
 
 _LSH_EVAL_THRESHOLD = 0.7

@@ -3010,12 +3010,10 @@ def agg_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_mcnemar_test — staged r11, REGISTERED r12 (cadence batch;
-# SURVEY round-11 log). McNemar's paired test on the two deterministic
+# text_mcnemar_test — McNemar's paired test on the two deterministic
 # annotators' "long" calls — the DISAGREEMENT-direction question kappa
 # cannot answer: do the annotators disagree SYMMETRICALLY, or is one
-# systematically stricter? Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# systematically stricter?
 # ---------------------------------------------------------------------------
 
 _MCNEMAR_CHI2_CRIT = 3.841  # chi-square(1) at 5% — pinned literal
@@ -3101,13 +3099,11 @@ def text_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_log_odds_dirichlet — staged r11, REGISTERED r12 (cadence
-# batch; SURVEY round-11 log). Monroe/Colaresi/Quinn "Fightin' Words"
-# (2008): log-odds-ratio with an informative Dirichlet prior, the
+# text_log_odds_dirichlet — Monroe/Colaresi/Quinn "Fightin' Words" (2008):
+# log-odds-ratio with an informative Dirichlet prior, the
 # corpus-comparison statistic that fixes both raw-PMI's rare-word
 # explosions (the prior shrinks them) and tf-idf's length confound (the
-# z-score normalizes by uncertainty). Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# z-score normalizes by uncertainty).
 # ---------------------------------------------------------------------------
 
 _LOGODDS_A0 = 500.0  # total prior mass — pinned literal
@@ -3245,16 +3241,15 @@ def text_log_odds_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_compression_quality — STAGED for the r14 cadence (parked
-# unregistered; SURVEY round-12 log). zlib compressibility as a document
-# quality signal: highly compressible text is repetitive/boilerplate
-# (template spam, keyword stuffing, machine-generated filler) — the
-# cheap, language-agnostic curation filter every large-corpus pipeline
-# runs next to the Gopher rules (text_quality_gopher) and exactly the
-# signal the repetition keys (text_dedup_repeated_spans,
-# text_template_detect) approximate lexically. ROWS-ONLY at flip: DuckDB
-# has no zlib, so the contract is the pytest identity against Python's
-# own zlib (same library, exact equality) plus determinism and bounds.
+# text_compression_quality — zlib compressibility as a document quality
+# signal: highly compressible text is repetitive/boilerplate (template
+# spam, keyword stuffing, machine-generated filler) — the cheap,
+# language-agnostic curation filter every large-corpus pipeline runs next
+# to the Gopher rules (text_quality_gopher) and exactly the signal the
+# repetition keys (text_dedup_repeated_spans, text_template_detect)
+# approximate lexically. ROWS-ONLY: DuckDB has no zlib, so the contract is
+# the pytest identity against Python's own zlib (same library, exact
+# equality) plus determinism and bounds.
 # ---------------------------------------------------------------------------
 
 _COMP_LEVEL = 6  # zlib default-ish level, pinned

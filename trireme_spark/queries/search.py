@@ -924,8 +924,7 @@ def search_query_elevation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# search_ndcg_eval — STAGED for the r13 cadence (parked unregistered;
-# SURVEY round-12 log). Ranking-quality evaluation of the BM25 retrieval:
+# search_ndcg_eval — Ranking-quality evaluation of the BM25 retrieval:
 # NDCG@10 / MRR@10 / precision@10 against a graded relevance label that is
 # INDEPENDENT of the scoring function (gain = number of distinct query
 # terms present in the doc, 0-3). The search family (bm25, rrf, phrase,

@@ -573,7 +573,7 @@ def stream_windowed_distinct_users(
     return hourly_distinct_users(table(spark, sf_dir, "events"))
 
 
-# --- stream_session_dynamic_gap (staged r11, REGISTERED r12) -----------------
+# --- stream_session_dynamic_gap ----------------------------------------------
 # Staged under the cadence rule (SURVEY round-11 log): built and
 # oracle-verified this round, decorator flips at the r12 rotation once
 # the r12 window is pinned. Dynamic-gap session windows are the Spark

@@ -7212,7 +7212,7 @@ def events_nb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- ts_theil_sen_trend (staged r10, REGISTERED r11) -----------------------
+# --- ts_theil_sen_trend ----------------------------------------------------
 # Same staging history as fn_json_variant (functions_scalar.py): built +
 # oracle-verified under the registration pause, decorator flipped in r11.
 # Fills the ROBUST-regression gap: agg_regression is OLS (one outlier day
@@ -8174,7 +8174,7 @@ def events_odds_ratio_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- etl_bitemporal_as_of (staged r11, REGISTERED r12) ------------------------
+# --- etl_bitemporal_as_of -----------------------------------------------------
 # Staged under the cadence rule (SURVEY round-11 log): built and
 # oracle-verified this round, decorator flips at the r12 rotation.
 # Bitemporal reconstruction is the warehouse op join_point_in_time
@@ -8281,14 +8281,12 @@ def etl_bitemporal_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# events_ab_delta_method — staged r11, REGISTERED r12 (cadence batch;
-# SURVEY round-11 log). Ratio-metric experiment readout with delta-method
-# variance: when the metric is a ratio of SUMS (revenue per click) but the
-# randomization unit is the USER, per-user observations are the iid unit and
-# Var(X̄/Ȳ) needs the first-order Taylor expansion — the correction every
-# experimentation platform applies before quoting a z on a ratio metric
-# (Deng, Knoblich & Lu 2018). Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# events_ab_delta_method — Ratio-metric experiment readout with
+# delta-method variance: when the metric is a ratio of SUMS (revenue per
+# click) but the randomization unit is the USER, per-user observations are
+# the iid unit and Var(X̄/Ȳ) needs the first-order Taylor expansion — the
+# correction every experimentation platform applies before quoting a z on
+# a ratio metric (Deng, Knoblich & Lu 2018).
 # ---------------------------------------------------------------------------
 
 _DELTA_METHOD_ORACLE = f"""
@@ -8433,12 +8431,10 @@ def events_ab_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ts_cross_correlation_leadlag — staged r11, REGISTERED r12 (cadence
-# batch; SURVEY round-11 log). Lead-lag cross-correlation function between
-# two daily revenue series: which segment MOVES FIRST, and by how many days
-# — the CCF that pairs with ts_autocorrelation (self) the way
-# agg_corr_matrix pairs with agg_regression. Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# ts_cross_correlation_leadlag — Lead-lag cross-correlation function
+# between two daily revenue series: which segment MOVES FIRST, and by how
+# many days — the CCF that pairs with ts_autocorrelation (self) the way
+# agg_corr_matrix pairs with agg_regression.
 # ---------------------------------------------------------------------------
 
 _CCF_EPOCH = "1990-01-01"
@@ -8565,12 +8561,10 @@ def ts_cross_correlation_leadlag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ts_spectral_entropy — staged r11, REGISTERED r12 (cadence batch;
-# SURVEY round-11 log). Normalized spectral entropy per market segment —
+# ts_spectral_entropy — Normalized spectral entropy per market segment —
 # the forecastability score (low entropy = concentrated spectrum = strong
-# cycle; high = white-noise-like) that the tsfeatures/M4 literature uses to
-# route series between seasonal and naive forecasters. Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# cycle; high = white-noise-like) that the tsfeatures/M4 literature uses
+# to route series between seasonal and naive forecasters.
 # ---------------------------------------------------------------------------
 
 _SE_HARMONICS = 16
@@ -8755,14 +8749,12 @@ def ts_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ts_pacf_durbin_levinson — staged r11, REGISTERED r12 (cadence batch;
-# SURVEY round-11 log). Partial autocorrelation at lags 1..5 per event
+# ts_pacf_durbin_levinson — Partial autocorrelation at lags 1..5 per event
 # type, via the Durbin-Levinson recursion UNROLLED into a generated
 # closed-form expression chain that both engines execute verbatim — the
 # AR-order identification tool (PACF cuts off at p for an AR(p)) that
 # pairs with ts_autocorrelation (ACF, MA-order) and ts_ljung_box
-# (whiteness). Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# (whiteness).
 # ---------------------------------------------------------------------------
 
 _PACF_MAXLAG = 5
@@ -8949,14 +8941,11 @@ def ts_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# orders_survival_nelson_aalen — staged r11, REGISTERED r12 (cadence
-# batch; SURVEY round-11 log). Nelson-Aalen cumulative hazard on the SAME
-# censored life table as orders_survival_km — the additive companion
+# orders_survival_nelson_aalen — Nelson-Aalen cumulative hazard on the
+# SAME censored life table as orders_survival_km — the additive companion
 # estimator (H(t) = Σ d/n, Var = Σ d/n²) preferred for small risk sets and
 # for hazard-RATE readouts; exp(−H) is the Fleming-Harrington survival
-# variant, emitted alongside for direct comparison with KM. Flip recipe:
-# add @register("orders_survival_nelson_aalen", oracle=_NA_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# variant, emitted alongside for direct comparison with KM.
 # ---------------------------------------------------------------------------
 
 _NA_ORACLE = f"""
@@ -9076,12 +9065,10 @@ def orders_survival_nelson_aalen(
 
 
 # ---------------------------------------------------------------------------
-# orders_chow_test — staged r11, REGISTERED r12 (cadence batch;
-# SURVEY round-11 log). Chow structural-break F-test: did the daily
-# revenue TREND LINE change at a known date? The parametric changepoint
-# companion to ts_pettitt_changepoint (rank-based, unknown date) and
-# ts_mann_kendall_trend (monotone, distribution-free). Flipped at the start of r12: decorator +
-# _SWEEP_PRIORITY slot added per the written recipe (SURVEY round-12 log).
+# orders_chow_test — Chow structural-break F-test: did the daily revenue
+# TREND LINE change at a known date? The parametric changepoint companion
+# to ts_pettitt_changepoint (rank-based, unknown date) and
+# ts_mann_kendall_trend (monotone, distribution-free).
 # ---------------------------------------------------------------------------
 
 _CHOW_SPLIT = "1998-07-01"
@@ -9243,16 +9230,12 @@ def orders_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ts_dtw_distance — staged r11, REGISTERED r12 (cadence batch; SURVEY
-# round-11 log). Dynamic Time Warping between segment seasonality profiles
-# — the elastic-alignment distance (Sakoe & Chiba 1978) that matches
-# shifted/stretched seasonal shapes where Euclidean punishes any phase
-# offset; the missing flagship of the ts family's distance toolbox.
-# ROWS-ONLY at flip (iterative DP state has no single-SQL form — the
-# graph_kcore precedent): register with @register("ts_dtw_distance") (no
-# oracle), add a rows_only.py entry (class "iterative_state", contract
-# tests/test_staged_r12e.py::test_dtw_python_recompute), and a
-# _SWEEP_PRIORITY slot.
+# ts_dtw_distance — Dynamic Time Warping between segment seasonality
+# profiles — the elastic-alignment distance (Sakoe & Chiba 1978) that
+# matches shifted/stretched seasonal shapes where Euclidean punishes any
+# phase offset; the missing flagship of the ts family's distance toolbox.
+# ROWS-ONLY: iterative DP state has no single-SQL form — the graph_kcore
+# precedent.
 # ---------------------------------------------------------------------------
 
 
@@ -9363,14 +9346,11 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# orders_wasserstein_1d — STAGED for the r13 cadence (parked unregistered;
-# SURVEY continuation log). Earth-mover distance between two segments'
-# order-price distributions on a fixed 1k-wide bin grid: in 1-D,
-# W1 = Σ |CDF_a − CDF_b| · binwidth — the distribution-shift metric that
-# (unlike KS's max-gap) weighs WHERE the mass moved, which is why drift
-# monitors quote it next to PSI. Flip recipe: add
-# @register("orders_wasserstein_1d", oracle=_WASSERSTEIN_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# orders_wasserstein_1d — Earth-mover distance between two segments'
+# order-price distributions on a fixed 1k-wide bin grid: in 1-D, W1 = Σ
+# |CDF_a − CDF_b| · binwidth — the distribution-shift metric that (unlike
+# KS's max-gap) weighs WHERE the mass moved, which is why drift monitors
+# quote it next to PSI.
 # ---------------------------------------------------------------------------
 
 _W1_BIN = 1000.0  # price bin width — fixed grid, cross-engine exact
@@ -9490,14 +9470,11 @@ def orders_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# events_propensity_match_att — STAGED for the r13 cadence (parked
-# unregistered; SURVEY continuation log). Nearest-neighbor propensity
-# matching (with replacement) for the ATT — the third causal estimator
-# next to events_ipw_ate (reweighting) and events_ab_cuped (variance
-# reduction): every treated user pairs with the closest control on the
-# score axis, and the effect is read off matched pairs. Flip recipe: add
-# @register("events_propensity_match_att", oracle=_PSM_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# events_propensity_match_att — Nearest-neighbor propensity matching (with
+# replacement) for the ATT — the third causal estimator next to
+# events_ipw_ate (reweighting) and events_ab_cuped (variance reduction):
+# every treated user pairs with the closest control on the score axis, and
+# the effect is read off matched pairs.
 # ---------------------------------------------------------------------------
 
 _PSM_ORACLE = f"""
@@ -9639,13 +9616,11 @@ def events_propensity_match_att(
 
 
 # ---------------------------------------------------------------------------
-# ts_granger_f_test — STAGED for the r13 cadence (parked unregistered;
-# SURVEY continuation log). Granger causality at lag 1: does YESTERDAY'S
+# ts_granger_f_test — Granger causality at lag 1: does YESTERDAY'S
 # BUILDING revenue improve today's MACHINERY forecast beyond MACHINERY's
 # own yesterday — the predictive-causality F-test that turns
 # ts_cross_correlation_leadlag's symmetric "they co-move" into a directed
-# claim. Flip recipe: add @register("ts_granger_f_test",
-# oracle=_GRANGER_ORACLE) and a _SWEEP_PRIORITY slot.
+# claim.
 # ---------------------------------------------------------------------------
 
 _GRANGER_F_CRIT = 3.84  # F(1, inf) at 5% — pinned literal
@@ -9799,16 +9774,13 @@ def ts_granger_f_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# events_attribution_shapley — STAGED for the r13 cadence (parked
-# unregistered; SURVEY continuation log). EXACT Shapley-value multi-touch
-# attribution (Shapley 1953; Zhao et al. 2018 for the marketing form) —
-# the game-theoretic closer of the attribution family: last-touch rewards
+# events_attribution_shapley — EXACT Shapley-value multi-touch attribution
+# (Shapley 1953; Zhao et al. 2018 for the marketing form) — the
+# game-theoretic closer of the attribution family: last-touch rewards
 # recency, linear splits equally, time-decay interpolates; Shapley is the
 # unique credit split satisfying efficiency/symmetry/dummy, and with a
 # BOUNDED channel alphabet it is computable exactly over the subset
-# lattice. Flip recipe: add
-# @register("events_attribution_shapley", oracle=_SHAPLEY_ORACLE) and a
-# _SWEEP_PRIORITY slot.
+# lattice.
 # ---------------------------------------------------------------------------
 
 # channel -> bit, fixed order (the non-purchase event types)
@@ -10006,14 +9978,11 @@ def events_attribution_shapley(
 
 
 # ---------------------------------------------------------------------------
-# orders_hill_tail_index — STAGED for the r13 cadence (parked
-# unregistered; SURVEY continuation log). Hill estimator of the price
-# distribution's tail index over the top-k order statistics — the
-# heavy-tail diagnostic (α < 2: infinite variance; α < 1: infinite mean)
-# that tells a risk/capacity model whether averages even converge, and the
-# EVT companion to orders_max_drawdown / agg_skewness_kurtosis. Flip
-# recipe: add @register("orders_hill_tail_index", oracle=_HILL_ORACLE)
-# and a _SWEEP_PRIORITY slot.
+# orders_hill_tail_index — Hill estimator of the price distribution's tail
+# index over the top-k order statistics — the heavy-tail diagnostic (α <
+# 2: infinite variance; α < 1: infinite mean) that tells a risk/capacity
+# model whether averages even converge, and the EVT companion to
+# orders_max_drawdown / agg_skewness_kurtosis.
 # ---------------------------------------------------------------------------
 
 _HILL_K = 100
@@ -10098,13 +10067,10 @@ def orders_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sample_pps_systematic — STAGED for the r13 cadence (parked unregistered;
-# SURVEY continuation log). Systematic probability-proportional-to-size
+# sample_pps_systematic — Systematic probability-proportional-to-size
 # sampling (the survey-statistics workhorse: one pass, fixed take, strict
 # size-proportional inclusion) — deterministic midpoint anchor instead of
-# a random start, so the draw is reproducible by construction. Flip
-# recipe: add @register("sample_pps_systematic", oracle=_PPS_ORACLE) and
-# a _SWEEP_PRIORITY slot.
+# a random start, so the draw is reproducible by construction.
 # ---------------------------------------------------------------------------
 
 _PPS_TAKE = 20  # selections per segment
@@ -10211,10 +10177,9 @@ def sample_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# events_ab_jackknife_ratio — STAGED for the r13 cadence (parked
-# unregistered; SURVEY round-12 log). Delete-one-bucket jackknife variance
-# for the SAME ratio-of-sums estimand as events_ab_delta_method (identical
-# md5 '|delta' arm split, identical x/y definitions) — the resampling
+# events_ab_jackknife_ratio — Delete-one-bucket jackknife variance for the
+# SAME ratio-of-sums estimand as events_ab_delta_method (identical md5
+# '|delta' arm split, identical x/y definitions) — the resampling
 # counterpart to the delta method's Taylor expansion, and the variance
 # estimator large experimentation platforms actually run (bucket jackknife
 # needs no derivatives and is robust to heavy-tailed per-user ratios).
@@ -10436,10 +10401,9 @@ def events_ab_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# events_capture_recapture — STAGED for the r13 cadence (parked
-# unregistered; SURVEY round-12 log). Chapman capture-recapture estimate of
-# the TRUE activity universe from two overlapping incomplete captures —
-# the population-size estimator (Lincoln-Petersen, Chapman bias-corrected)
+# events_capture_recapture — Chapman capture-recapture estimate of the
+# TRUE activity universe from two overlapping incomplete captures — the
+# population-size estimator (Lincoln-Petersen, Chapman bias-corrected)
 # that coverage/QA pipelines use to answer "how many distinct units exist,
 # given two partial views?" (two crawls of one corpus, two days of one
 # logset). Unit = active (user, day); capture 1 = clicked that day,
@@ -10532,15 +10496,14 @@ def events_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ts_dickey_fuller_unit_root — STAGED for the r13 cadence (parked
-# unregistered; SURVEY round-12 log). Dickey-Fuller unit-root test on the
-# monthly revenue series: Δy_t = α + ρ·y_{t−1} + ε, H0: ρ = 0 (random
-# walk). The STATIONARITY GATE the rest of the ts family quietly assumes —
-# ACF/PACF, Ljung-Box, Granger and the trend tests are all only
-# interpretable on (difference-)stationary series, and this key is the
-# check that says whether to difference first. Same closed-form
-# sufficient-statistic OLS machinery as ts_granger_f_test (one regressor +
-# intercept instead of two), same scale-free-outputs doctrine.
+# ts_dickey_fuller_unit_root — Dickey-Fuller unit-root test on the monthly
+# revenue series: Δy_t = α + ρ·y_{t−1} + ε, H0: ρ = 0 (random walk). The
+# STATIONARITY GATE the rest of the ts family quietly assumes — ACF/PACF,
+# Ljung-Box, Granger and the trend tests are all only interpretable on
+# (difference-)stationary series, and this key is the check that says
+# whether to difference first. Same closed-form sufficient-statistic OLS
+# machinery as ts_granger_f_test (one regressor + intercept instead of
+# two), same scale-free-outputs doctrine.
 # ---------------------------------------------------------------------------
 
 _DF_CRIT = -2.86  # Dickey-Fuller tau_mu (constant, no trend), 5%, n->inf
@@ -10643,13 +10606,11 @@ def ts_dickey_fuller_unit_root(
 
 
 # ---------------------------------------------------------------------------
-# events_calibration_curve — STAGED for the r13 cadence (parked
-# unregistered; SURVEY round-12 log). Reliability diagram + Brier score +
-# ECE for a probability-shaped score (per-user click share) against a
-# binary outcome (heavy purchaser: purchase share > 20%): the
-# CALIBRATION readout every
-# LLM-judge / quality-classifier pipeline needs next to its accuracy —
-# a model can rank perfectly (high AUC/NDCG) and still lie about its
+# events_calibration_curve — Reliability diagram + Brier score + ECE for a
+# probability-shaped score (per-user click share) against a binary outcome
+# (heavy purchaser: purchase share > 20%): the CALIBRATION readout every
+# LLM-judge / quality-classifier pipeline needs next to its accuracy — a
+# model can rank perfectly (high AUC/NDCG) and still lie about its
 # confidence; ECE is the number that says so.
 # ---------------------------------------------------------------------------
 
@@ -10794,13 +10755,12 @@ def events_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# events_poisson_rate_ratio — STAGED for the r14 cadence (parked
-# unregistered; SURVEY round-12 log). Two-sample Poisson rate-ratio test
-# for the error rate per observed day, first half-month vs second: the
-# COUNT-data member of the inference family (means: welch/permutation;
-# ranks: mannwhitney/kruskal; proportions: wilson/odds-ratio; rates:
-# this) — "did the error rate change?" asked the way an SRE actually
-# frames it, events per unit exposure, not per event.
+# events_poisson_rate_ratio — Two-sample Poisson rate-ratio test for the
+# error rate per observed day, first half-month vs second: the COUNT-data
+# member of the inference family (means: welch/permutation; ranks:
+# mannwhitney/kruskal; proportions: wilson/odds-ratio; rates: this) — "did
+# the error rate change?" asked the way an SRE actually frames it, events
+# per unit exposure, not per event.
 # ---------------------------------------------------------------------------
 
 _RATE_RATIO_ORACLE = f"""
@@ -10912,10 +10872,9 @@ def events_poisson_rate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ts_forecast_mase_eval — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-12 log). MASE (Hyndman & Koehler 2006) for the
+# ts_forecast_mase_eval — MASE (Hyndman & Koehler 2006) for the
 # seasonal-naive forecaster on daily revenue — the FORECAST REFEREE,
-# completing the round's eval family (search→NDCG, classifier→MCC,
+# completing the eval family (search→NDCG, classifier→MCC,
 # probability→ECE, targeting→lift, forecast→MASE): scale-free, defined on
 # zero-revenue days where MAPE explodes, and with the built-in baseline
 # comparison (MASE < 1 = beats the naive walk) that keeps forecast demos
@@ -11021,14 +10980,13 @@ def ts_forecast_mase_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# orders_event_study_did — STAGED for the r14 cadence (parked
-# unregistered; SURVEY round-12 log). Event-study difference-in-differences
-# around a pinned event month: per relative month τ ∈ −3..+3 the
-# treated-vs-control revenue gap, re-centered by the PRE-period mean gap —
-# the leads-and-lags plot that upgrades events_ab_diff_in_diff's single
-# post-pre number into a trajectory, and whose pre-period effects
-# doubling as the parallel-trends diagnostic (pre effects ≈ 0 is the
-# assumption made VISIBLE, not assumed).
+# orders_event_study_did — Event-study difference-in-differences around a
+# pinned event month: per relative month τ ∈ −3..+3 the treated-vs-control
+# revenue gap, re-centered by the PRE-period mean gap — the leads-and-lags
+# plot that upgrades events_ab_diff_in_diff's single post-pre number into
+# a trajectory, and whose pre-period effects doubling as the
+# parallel-trends diagnostic (pre effects ≈ 0 is the assumption made
+# VISIBLE, not assumed).
 # ---------------------------------------------------------------------------
 
 _ES_EVENT_MONTH = (1998, 1)  # pinned event: 1998-01
@@ -11143,14 +11101,13 @@ def orders_event_study_did(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# orders_logrank_test — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-13 log). Two-sample log-rank test comparing customer
-# survival (the KM/Nelson-Aalen lifetime definition) between the
-# BUILDING market segment and the rest: the survival family's TEST —
-# KM estimates the curve, Nelson-Aalen the cumulative hazard, and this
-# answers "are the two curves actually different?" the way censoring-
-# honest inference requires (a t-test on lifetimes would treat censored
-# customers as churned).
+# orders_logrank_test — Two-sample log-rank test comparing customer
+# survival (the KM/Nelson-Aalen lifetime definition) between the BUILDING
+# market segment and the rest: the survival family's TEST — KM estimates
+# the curve, Nelson-Aalen the cumulative hazard, and this answers "are the
+# two curves actually different?" the way censoring- honest inference
+# requires (a t-test on lifetimes would treat censored customers as
+# churned).
 # ---------------------------------------------------------------------------
 
 _LOGRANK_SEG = "BUILDING"
@@ -11348,13 +11305,12 @@ def orders_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ts_kpss_stationarity — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-13 log). KPSS level-stationarity test on the monthly
-# revenue series: the COMPLEMENT of the Dickey-Fuller gate — DF's null
-# is a unit root (reject ⇒ stationary), KPSS's null is stationarity
-# (reject ⇒ unit root), so the pair brackets the decision: DF-reject +
-# KPSS-accept is the only configuration that licenses undifferenced
-# ACF/trend machinery.
+# ts_kpss_stationarity — KPSS level-stationarity test on the monthly
+# revenue series: the COMPLEMENT of the Dickey-Fuller gate — DF's null is
+# a unit root (reject ⇒ stationary), KPSS's null is stationarity (reject ⇒
+# unit root), so the pair brackets the decision: DF-reject + KPSS-accept
+# is the only configuration that licenses undifferenced ACF/trend
+# machinery.
 # ---------------------------------------------------------------------------
 
 _KPSS_LAGS = 3  # floor(4*(n/100)^0.25) for the fixture's ~80-month span;
@@ -11524,14 +11480,13 @@ def ts_kpss_stationarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# orders_gumbel_return_level — STAGED for the r14 cadence (parked
-# unregistered; SURVEY round-13 log). Extreme-value analysis by BLOCK
-# MAXIMA: monthly maxima of o_totalprice fit to a Gumbel by the method
-# of moments, with the T=100-block return level and the probability
-# that a fresh month beats the historical record. The complement of
-# orders_hill_tail_index: Hill reads the tail exponent from
-# peaks-over-threshold, Gumbel/block-maxima reads return levels from
-# the max-domain — the two classical EVT legs, now both present.
+# orders_gumbel_return_level — Extreme-value analysis by BLOCK MAXIMA:
+# monthly maxima of o_totalprice fit to a Gumbel by the method of moments,
+# with the T=100-block return level and the probability that a fresh month
+# beats the historical record. The complement of orders_hill_tail_index:
+# Hill reads the tail exponent from peaks-over-threshold,
+# Gumbel/block-maxima reads return levels from the max-domain — the two
+# classical EVT legs, now both present.
 # ---------------------------------------------------------------------------
 
 _GUMBEL_EULER = 0.5772156649015329  # Euler-Mascheroni, double-exact literal
@@ -11640,13 +11595,11 @@ def orders_gumbel_return_level(
 
 
 # ---------------------------------------------------------------------------
-# events_uplift_qini — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-13 log). Qini/uplift gains curve over 10 FIXED-WIDTH
-# score bands: the TARGETING referee for heterogeneous treatment
-# effects — the lift table ranks by outcome propensity, the Qini curve
-# ranks by *incremental* response (treated minus rescaled control),
-# which is the number a "who should we treat" decision actually needs.
-# Completes the round's eval/referee theme for the A/B family.
+# events_uplift_qini — Qini/uplift gains curve over 10 FIXED-WIDTH score
+# bands: the TARGETING referee for heterogeneous treatment effects — the
+# lift table ranks by outcome propensity, the Qini curve ranks by
+# *incremental* response (treated minus rescaled control), which is the
+# number a "who should we treat" decision actually needs.
 # ---------------------------------------------------------------------------
 
 _QINI_SALT = "|qini"
@@ -11804,12 +11757,11 @@ def events_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ts_conformal_interval_eval — STAGED for the r14 cadence (parked
-# unregistered; SURVEY round-13 log). Split-conformal prediction
-# interval for the seasonal-naive daily forecaster + its empirical
-# test-set coverage: the UNCERTAINTY referee the eval family was
-# missing — MASE grades the point forecast, this grades whether the
-# promised 80% interval actually covers 80%.
+# ts_conformal_interval_eval — Split-conformal prediction interval for the
+# seasonal-naive daily forecaster + its empirical test-set coverage: the
+# UNCERTAINTY referee the eval family was missing — MASE grades the point
+# forecast, this grades whether the promised 80% interval actually covers
+# 80%.
 # ---------------------------------------------------------------------------
 
 _CONF_LAG = 7  # seasonal-naive horizon (days)
@@ -11954,13 +11906,12 @@ def ts_conformal_interval_eval(
 
 
 # ---------------------------------------------------------------------------
-# ts_sample_entropy — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-13 log). Sample entropy (Richman & Moorman 2000) of the
+# ts_sample_entropy — Sample entropy (Richman & Moorman 2000) of the
 # monthly revenue series at m=2, r=0.2σ: the REGULARITY measure the ts
-# family was missing — spectral entropy reads frequency-domain
-# flatness, SampEn reads time-domain predictability (do similar
-# 2-month patterns stay similar one month later?), robust to series
-# length and free of the self-match bias ApEn carries.
+# family was missing — spectral entropy reads frequency-domain flatness,
+# SampEn reads time-domain predictability (do similar 2-month patterns
+# stay similar one month later?), robust to series length and free of the
+# self-match bias ApEn carries.
 # ---------------------------------------------------------------------------
 
 _SAMPEN_M = 2
@@ -12110,13 +12061,12 @@ def ts_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# events_sequential_sprt — STAGED for the r14 cadence (parked
-# unregistered; SURVEY round-13 log). Wald sequential probability ratio
-# test on the daily purchase rate: the SEQUENTIAL member of the
-# inference family — fixed-horizon tests (welch, permutation, rate
-# ratio) answer after the window closes; the SPRT walks the cumulative
-# log-likelihood ratio day by day and STOPS at the first boundary
-# crossing, the shape every always-on experimentation monitor uses.
+# events_sequential_sprt — Wald sequential probability ratio test on the
+# daily purchase rate: the SEQUENTIAL member of the inference family —
+# fixed-horizon tests (welch, permutation, rate ratio) answer after the
+# window closes; the SPRT walks the cumulative log-likelihood ratio day by
+# day and STOPS at the first boundary crossing, the shape every always-on
+# experimentation monitor uses.
 # ---------------------------------------------------------------------------
 
 import math as _sprt_math

@@ -28,6 +28,18 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
+def shuffle_width() -> int:
+    """``spark.sql.shuffle.partitions`` for engine sessions and queries.
+
+    Default 32: at sf0.1 on local[32] a 2×-cores width (64) lost every
+    cold bench trial to 32 (8.39–9.20 s vs 9.24–9.61 s); the extra reduce
+    tasks are scheduling overhead and AQE coalesces either way. On a real
+    cluster set ``TRIREME_SHUFFLE_WIDTH`` to ~2-3× total cores (or total
+    shuffle bytes / 256 MB) and let AQE coalesce down.
+    """
+    return int(os.environ.get("TRIREME_SHUFFLE_WIDTH") or 32)
+
+
 def get_spark(
     app_name: str = "trireme-spark",
     cpus: str | int | None = None,
@@ -35,7 +47,7 @@ def get_spark(
     driver_memory: str = "8g",
 ) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    shuffle = shuffle_partitions or int(os.environ.get("TRIREME_SHUFFLE", "16"))
+    shuffle = shuffle_partitions or shuffle_width()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -62,19 +74,9 @@ def prep(spark: SparkSession) -> SparkSession:
     # events.parquet carries TIMESTAMP(NANOS); Spark 4 errors without this
     # (see sources/io.py:table).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Shuffle width (opt r15, guide §2.2: size the width from the data, not
-    # the core count). The r14 blanket 2×-cores rule (64 on local[32]) was
-    # A/B'd cold at local[32] under the driver's methodology and LOST on
-    # every trial (totals 8.69/8.39/9.20 s @ 32 vs 9.61/9.27/9.24 s @ 64 —
-    # at sf0.1 the extra reduce tasks are pure scheduling overhead; AQE
-    # coalesces either way). Default 32 — the value every committed bench
-    # number was measured at. On a real cluster, set TRIREME_SHUFFLE_WIDTH
-    # to ~2-3× total cores (or better, total shuffle bytes / 256 MB) and
-    # let AQE coalesce down; the env override keeps the setting
-    # parameterised without re-tuning local behavior.
+    width = str(shuffle_width())  # a malformed value raises, as in get_spark
     try:
-        width = int(os.environ.get("TRIREME_SHUFFLE_WIDTH") or 32)
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        spark.conf.set("spark.sql.shuffle.partitions", width)
     except Exception:
         pass  # immutable in some environments; harmless
     _ship_package(spark)
