@@ -24,7 +24,7 @@ from trireme_spark.session import get_spark  # noqa: E402
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-spark = get_spark("trireme-plans", cpus=cpus, shuffle_partitions=32)
+spark = get_spark("trireme-plans", cpus=cpus)
 
 out_dir = os.path.join(
     _repo, "plans", os.environ.get("TRIREME_PLANS_ROUND", "r15")

@@ -143,10 +143,7 @@ def main() -> None:
     from trireme_spark import registry
     from trireme_spark.session import get_spark
 
-    spark = get_spark(
-        "trireme-dup-stress", cpus="8", shuffle_partitions=32,
-        driver_memory="16g",
-    )
+    spark = get_spark("trireme-dup-stress", cpus="8", driver_memory="16g")
     build_stage(spark)
 
     # Cache-boundedness gate (r15, verdict item 9): every cache_once /

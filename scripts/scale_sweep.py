@@ -18,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from trireme_spark.session import get_spark  # noqa: E402
 
 BUDGET_S = float(os.environ.get("SCALE_SWEEP_BUDGET_S", "10"))
 SF_DIR = os.environ.get("SCALE_SWEEP_SF", "/root/testdata/sf0.1")
@@ -114,15 +114,10 @@ HEAVY_3X = {
 # broken gate) trips it again.
 HEAVY_10X = set()
 
-spark = (
-    SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-    .config("spark.sql.shuffle.partitions", "32")
-    # the 1g JVM default can't hold the full registry's worth of anything; size the
-    # heap like get_spark() does so OOMs here mean plan problems, not
-    # harness problems
-    .config("spark.driver.memory", "8g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+# get_spark's 8g heap (the 1g JVM default can't hold the full registry's
+# worth of anything) means OOMs here are plan problems, not harness problems
+spark = get_spark(
+    "trireme-scale-sweep", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8")
 )
 
 import __spark_entry__ as e  # noqa: E402

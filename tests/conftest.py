@@ -19,33 +19,28 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from trireme_spark.session import get_spark
+from trireme_spark.session import get_spark, shuffle_width
 from trireme_spark.sources.io import TABLES
 
 SF_SMOKE = os.environ.get("TRIREME_TEST_SF", "/root/testdata/sf0.001")
 SF_FULL = os.environ.get("TRIREME_TEST_SF_FULL", "/root/testdata/sf0.01")
 
 
-# the session conf pin — the hostile-layout harness below restores to
-# THIS value, so it lives in exactly one place
-PINNED_SHUFFLE = 8
-
-
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("trireme-tests", cpus=8, shuffle_partitions=PINNED_SHUFFLE)
+    s = get_spark("trireme-tests", cpus=8)
     yield s
     s.stop()
 
 
 def hostile_layout(spark, monkeypatch, run):
     """Run ``run()`` under the hostile partition layout and restore the
-    pinned session conf after: 7 shuffle partitions (odd, tiny, divides
-    nothing evenly), 64 KB scan splits (every fixture scan goes
-    multi-split), prep()'s shuffle pin raising as an immutable-conf
-    environment would, and a cleared cache so cached stages actually
-    re-materialize under the hostile layout instead of being served
-    from a pinned-layout InMemoryRelation."""
+    session conf (width ``shuffle_width()``) after: 7 shuffle partitions
+    (odd, tiny, divides nothing evenly), 64 KB scan splits (every
+    fixture scan goes multi-split), prep()'s shuffle pin raising as an
+    immutable-conf environment would, and a cleared cache so cached
+    stages actually re-materialize under the hostile layout instead of
+    being served from a pinned-layout InMemoryRelation."""
     from pyspark.sql.conf import RuntimeConfig
 
     spark.catalog.clearCache()
@@ -66,9 +61,7 @@ def hostile_layout(spark, monkeypatch, run):
     finally:
         monkeypatch.setattr(RuntimeConfig, "set", real_set)
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(PINNED_SHUFFLE)
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width()))
         spark.catalog.clearCache()
 
 

@@ -59,10 +59,8 @@ AUDITED = {
     "operators/winframes.py": {"global_range_frame_sum": 4, "two_pass_ntile": 2},
     "queries/aggregates.py": {
         # r13 staging audit: cronbach's grand-mean and total-variance
-        # 1-row attaches; fisher's 1-row observed-lnp attach (the H
-        # spine joins ride broadcast_if_small)
+        # 1-row attaches
         "agg_cronbach_alpha": 2,
-        "agg_fisher_exact_2x2": 1,
         # r15 staging audit: kish's 1-row (n, wbar) stats attach
         "sample_kish_design_effect": 1,
         # r13-staged audit: the lift table attaches the 1-row
@@ -120,12 +118,6 @@ AUDITED = {
         "agg_bartlett_test": 1,
         "agg_welch_anova": 2,
         "agg_mood_median_test": 2,
-        # r16 staging audit (batch 4): icc attaches the 1-row mean and
-        # the 1-row totals; bhattacharyya its 1-row totals; JT its
-        # 1-row group-size fold — all single-row aggregates.
-        "agg_icc_oneway": 2,
-        "agg_bhattacharyya_distance": 1,
-        "agg_jonckheere_terpstra": 1,
     },
     "queries/clustering.py": {"cluster_assign": 1, "cluster_silhouette": 1},
     "queries/filters.py": {"filter_top_percent": 1},
@@ -164,9 +156,6 @@ AUDITED = {
         # node-set-sized and ride the same once-per-query size gate.
         "graph_label_propagation": 1,
         "graph_pagerank_copurchase": 1,
-        # r15 staging audit: clustering coefficient attaches the 1-row
-        # edge-count fold to the 1-row node/triangle fold
-        "graph_clustering_coefficient": 1,
     },
     "queries/llm_sim.py": {
         # r14-staged audit: the LSH referee attaches two 1-row count

@@ -147,6 +147,15 @@ def test_prep_rejects_malformed_shuffle_width(spark, monkeypatch):
         session.prep(spark)
 
 
+def test_fixture_session_starts_at_shuffle_width(spark):
+    """get_spark builds at the width prep() applies, so a test's width
+    does not depend on whether a registered query ran before it."""
+    from trireme_spark.session import shuffle_width
+
+    width = spark.newSession().conf.get("spark.sql.shuffle.partitions")
+    assert width == str(shuffle_width())
+
+
 def _fast_path_values() -> list[float]:
     """Adversarial doubles for the per-row rounding, all |x| < 9.99e11."""
     vals = []

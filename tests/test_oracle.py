@@ -60,7 +60,7 @@ def test_sweep_priority_covers_registry_exactly():
     assert not extra, f"registered keys not in the priority list: {extra}"
 
 
-# The parked lot: 40 query functions built for the staging cadence and
+# The parked lot: 35 query functions built for the staging cadence and
 # never registered. Each still carries its own staging tests
 # (tests/test_staged_r15*.py, tests/test_staged_r16*.py). The set may only
 # shrink: deleting a parked key (with its tests) or registering it removes
@@ -69,7 +69,6 @@ _PARKED = frozenset(
     {
         "agg_cochran_q",
         "orders_rank_biserial",
-        "agg_fisher_exact_2x2",
         "agg_youden_j_threshold",
         "sample_kish_design_effect",
         "agg_wilcoxon_signed_rank",
@@ -77,10 +76,6 @@ _PARKED = frozenset(
         "agg_welch_anova",
         "agg_mood_median_test",
         "agg_partial_correlation",
-        "agg_icc_oneway",
-        "agg_bhattacharyya_distance",
-        "agg_jonckheere_terpstra",
-        "graph_clustering_coefficient",
         "graph_rich_club_coefficient",
         "graph_katz_truncated",
         "sim_ann_recall_eval",
@@ -162,6 +157,39 @@ def test_no_unregistered_query_functions():
     )
     stale = sorted(_PARKED - set(unused))
     assert not stale, f"no longer parked, drop from _PARKED: {stale}"
+
+
+def test_no_unused_imports():
+    """An import, at module level or inside a function, whose name the
+    module never uses is dead weight that deleting code tends to leave
+    behind. ``from __future__``, ``__init__.py`` re-exports and lines
+    marked ``# noqa`` are exempt."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(registry.__file__).parent
+    unused = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        src = path.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            stmt = lines[node.lineno - 1 : node.end_lineno]
+            if any("# noqa" in line for line in stmt):
+                continue
+            for alias in node.names:
+                bound = alias.asname or alias.name.split(".")[0]
+                if alias.name != "*" and bound not in used:
+                    rel = path.relative_to(pkg.parent)
+                    unused.append(f"{rel}:{node.lineno} {bound}")
+    assert not unused, f"imported but never used: {unused}"
 
 
 # Every key that legitimately has no DuckDB oracle lives in the declared

@@ -9,15 +9,14 @@ The image/audio decode libraries are NOT in this container, so the decoder
 is STUBBED: :func:`decode_features_stub` derives deterministic pseudo
 features from the raw bytes (documented formulas, oracle-mirrorable in
 SQL). The Spark-side plumbing — binary schema, batch iteration, UDF
-signature, partitioning — is real and tested. Swapping in a real decoder
-is the marked block in ``_decode_batch`` (PIL / librosa / pyav), behind
-``TRIREME_REAL_DECODE=1`` → NotImplementedError until those libs exist.
+signature, partitioning — is real and tested. A real decoder (PIL /
+librosa / pyav over ``io.BytesIO(payload)``) replaces the body of
+``_decode_batch``.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -32,13 +31,6 @@ DECODE_SCHEMA = (
 
 
 def _decode_batch(batch: pd.DataFrame) -> pd.DataFrame:
-    if os.environ.get("TRIREME_REAL_DECODE") == "1":
-        # Integration point for a real decoder (PIL.Image.open /
-        # librosa.load / av.open over io.BytesIO(payload)).
-        raise NotImplementedError(
-            "real media decode requires PIL/librosa/pyav — not in this "
-            "container (stub active by default)"
-        )
     payloads = batch["payload"]
     out = pd.DataFrame()
     out["doc_id"] = batch["doc_id"]
@@ -90,15 +82,11 @@ def resize_stub(binary_df: DataFrame, factor: int = 4) -> DataFrame:
     analogue of nearest-neighbor image downscaling — and digests the
     result so the full Arrow byte round-trip is value-checked. A real
     implementation replaces the slice with PIL ``Image.resize`` under the
-    same batch iteration (gate: TRIREME_REAL_DECODE, as in decode)."""
+    same batch iteration."""
     import hashlib
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            if os.environ.get("TRIREME_REAL_DECODE") == "1":
-                raise NotImplementedError(
-                    "real media resize requires PIL — not in this container"
-                )
             out = pd.DataFrame()
             out["doc_id"] = batch["doc_id"]
             resized = batch["payload"].map(lambda b: bytes(b)[::factor])

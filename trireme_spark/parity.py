@@ -291,9 +291,6 @@ def ts_ms(col: Column | str) -> Column:
     return F.date_trunc("millisecond", c)
 
 
-ORACLE_TS_MS = "date_trunc('millisecond', {col})"
-
-
 def meta_part(col: Column | str) -> Column:
     """Constant-but-NON-FOLDABLE partition key for metadata windows.
 

@@ -5906,218 +5906,6 @@ def orders_rank_biserial(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# agg_fisher_exact_2x2 — STAGED for the r15 cadence (parked
-# unregistered; SURVEY round-13 log). Fisher's EXACT test on the
-# (BUILDING segment) × (deep-delinquent balance) 2×2: the exact-
-# inference member of the proportion family — odds_ratio_2x2 quotes
-# the Wald CI and χ²-class approximations, which are exactly what
-# breaks on small cells; Fisher sums the hypergeometric tail itself.
-# The whole computation is SQL algebra: log-factorials come from a
-# prefix-summed ln spine (no lgamma builtin needed in either engine),
-# and the support enumeration is a margin-bounded sequence.
-# ---------------------------------------------------------------------------
-
-_FISHER_BAL = -500.0  # deep-delinquent threshold (rare outcome)
-_FISHER_SEG = "BUILDING"
-
-_FISHER_ORACLE = f"""
-WITH cells AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(COUNT(*) FILTER (WHERE c_mktsegment = '{_FISHER_SEG}')
-              AS BIGINT) AS r1,
-         CAST(COUNT(*) FILTER (WHERE c_acctbal < {_FISHER_BAL})
-              AS BIGINT) AS c1,
-         CAST(COUNT(*) FILTER (WHERE c_mktsegment = '{_FISHER_SEG}'
-                               AND c_acctbal < {_FISHER_BAL})
-              AS BIGINT) AS a
-  FROM customer
-), spine AS (
-  -- H(i) = Σ_{{j≤i}} ln j (H(0) = 0 via ln(max(i,1))): exact pico-unit
-  -- prefix sums make every log-binomial difference bit-identical
-  SELECT i,
-         CAST(SUM(CAST(FLOOR(ln(GREATEST(i, 1)) * 1e12)
-                       AS DECIMAL(38,12))) OVER (
-           ORDER BY i ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 1e12 AS h
-  FROM (SELECT unnest(generate_series(0, (SELECT n FROM cells))) AS i)
-), k AS (
-  SELECT unnest(generate_series(GREATEST(0, r1 + c1 - n),
-                                LEAST(r1, c1))) AS k,
-         n, r1, c1, a
-  FROM cells
-), lp AS (
-  SELECT k.k, k.a,
-         FLOOR((hr1.h - hk.h - hr1k.h
-                + hr2.h - hc1k.h - hr2k.h
-                - (hn.h - hc1.h - hnc1.h)) * 1e12) / 1e12 AS lnp
-  FROM k
-  JOIN spine hk   ON hk.i = k.k
-  JOIN spine hr1k ON hr1k.i = k.r1 - k.k
-  JOIN spine hc1k ON hc1k.i = k.c1 - k.k
-  JOIN spine hr2k ON hr2k.i = k.n - k.r1 - k.c1 + k.k
-  JOIN spine hr1  ON hr1.i = k.r1
-  JOIN spine hr2  ON hr2.i = k.n - k.r1
-  JOIN spine hn   ON hn.i = k.n
-  JOIN spine hc1  ON hc1.i = k.c1
-  JOIN spine hnc1 ON hnc1.i = k.n - k.c1
-), obs AS (
-  SELECT lnp AS lnp_obs FROM lp WHERE k = a
-), p AS (
-  SELECT CAST(SUM(CAST(FLOOR(exp(lnp) * 1e15) AS DECIMAL(38,0)))
-              AS DOUBLE) / 1e15 AS p2
-  FROM lp CROSS JOIN obs
-  WHERE lnp <= lnp_obs
-)
-SELECT n, r1 AS n_exposed, c1 AS n_outcome, a AS n_both,
-       FLOOR(p2 * 1e6) / 1e6 AS p_two_sided,
-       FLOOR(p2 * 1e6) / 1e6 < 0.05 AS significant
-FROM p CROSS JOIN cells
-"""
-
-
-def agg_fisher_exact_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sided Fisher exact p = Σ_{{k: P(k) ≤ P(a)}} P(k) over the
-    hypergeometric support (the "sum of probabilities no larger than
-    the observed table" convention, applied to 1e-12-quantized log
-    probabilities so the inclusion rule is a tie-free total order —
-    stated). P(k) = C(r1,k)·C(n−r1,c1−k)/C(n,c1) with every binomial
-    in LOG space via prefix sums of ln(i) — the spine trick that
-    makes exact inference pure SQL in both engines (no lgamma).
-
-    Cross-engine exactness: H(i) rides exact pico-unit DECIMAL(38,12)
-    running sums of quantized ln terms, so every lnp(k) is
-    bit-identical; probabilities re-enter linear space via exp on
-    identical doubles and sum as 1e-15-quantized exact integers
-    (support terms below 1e-15 drop identically in both engines —
-    invisible at the 1e-6 readout).
-
-    Scale design: the ln spine and the support enumeration are
-    MARGIN-bounded sequences (keyed window + equi-joins on bounded
-    frames) — linear in the subpopulation, never in corpus pairs. The
-    exact test's statistical domain IS small cells; when margins
-    outgrow it, events_odds_ratio_2x2's normal machinery is the
-    documented path (and this key's cost stays margin-linear
-    regardless)."""
-    from trireme_spark.operators.hints import cache_once as _co
-
-    c = table(spark, sf_dir, "customer")
-    # the 1-row margin frame feeds THREE consumers (ln spine, support
-    # enumeration, final attach) — cached so the corpus scans once
-    cells = _co(
-        c.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.col("c_mktsegment") == _FISHER_SEG).alias("r1"),
-            F.count_if(F.col("c_acctbal") < _FISHER_BAL).alias("c1"),
-            F.count_if(
-                (F.col("c_mktsegment") == _FISHER_SEG)
-                & (F.col("c_acctbal") < _FISHER_BAL)
-            ).alias("a"),
-        )
-    )
-    spine = cells.select(
-        F.explode(F.sequence(F.lit(0), F.col("n"))).alias("i")
-    )
-    w_h = (
-        Window.partitionBy(meta_part("i"))
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    h = spine.select(
-        "i",
-        (
-            F.sum(
-                F.floor(
-                    F.log(F.greatest(F.col("i"), F.lit(1))) * 1e12
-                ).cast("decimal(38,12)")
-            )
-            .over(w_h)
-            .cast("double")
-            / 1e12
-        ).alias("h"),
-    )
-    from trireme_spark.operators.hints import broadcast_if_small, cache_once
-
-    h = cache_once(h)
-    k = cells.select(
-        F.explode(
-            F.sequence(
-                F.greatest(
-                    F.lit(0), F.col("r1") + F.col("c1") - F.col("n")
-                ),
-                F.least(F.col("r1"), F.col("c1")),
-            )
-        ).alias("k"),
-        "n",
-        "r1",
-        "c1",
-        "a",
-    )
-
-    def hjoin(df, idx_expr, out):
-        hh = broadcast_if_small(
-            h.select(F.col("i").alias(f"_i_{out}"), F.col("h").alias(out))
-        )
-        return df.join(hh, idx_expr == F.col(f"_i_{out}")).drop(
-            f"_i_{out}"
-        )
-
-    lp = k
-    lp = hjoin(lp, F.col("k"), "hk")
-    lp = hjoin(lp, F.col("r1") - F.col("k"), "hr1k")
-    lp = hjoin(lp, F.col("c1") - F.col("k"), "hc1k")
-    lp = hjoin(
-        lp, F.col("n") - F.col("r1") - F.col("c1") + F.col("k"), "hr2k"
-    )
-    lp = hjoin(lp, F.col("r1"), "hr1")
-    lp = hjoin(lp, F.col("n") - F.col("r1"), "hr2")
-    lp = hjoin(lp, F.col("n"), "hn")
-    lp = hjoin(lp, F.col("c1"), "hc1")
-    lp = hjoin(lp, F.col("n") - F.col("c1"), "hnc1")
-    lnp = fquant(
-        F.col("hr1")
-        - F.col("hk")
-        - F.col("hr1k")
-        + F.col("hr2")
-        - F.col("hc1k")
-        - F.col("hr2k")
-        - (F.col("hn") - F.col("hc1") - F.col("hnc1")),
-        12,
-    )
-    scored = lp.select(
-        "k", "n", "r1", "c1", "a", lnp.alias("lnp")
-    )
-    obs = scored.where(F.col("k") == F.col("a")).select(
-        F.col("lnp").alias("lnp_obs")
-    )
-    p = (
-        scored.crossJoin(F.broadcast(obs))
-        .where(F.col("lnp") <= F.col("lnp_obs"))
-        .agg(
-            F.max("n").alias("n"),
-            F.max("r1").alias("n_exposed"),
-            F.max("c1").alias("n_outcome"),
-            F.max("a").alias("n_both"),
-            (
-                F.sum(
-                    F.floor(F.exp(F.col("lnp")) * 1e15).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
-                / 1e15
-            ).alias("p2"),
-        )
-    )
-    pq = fquant(F.col("p2"))
-    return p.select(
-        "n",
-        "n_exposed",
-        "n_outcome",
-        "n_both",
-        pq.alias("p_two_sided"),
-        (pq < 0.05).alias("significant"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # agg_youden_j_threshold — STAGED for the r15 cadence (parked
 # unregistered; SURVEY round-13 log). Youden-J optimal operating point
 # on the SAME score/label pair as orders_auc_roc / orders_score_lift_table:
@@ -7025,428 +6813,4 @@ def agg_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         fquant(fz).alias("fisher_z"),
         zs.alias("z_stat"),
         (F.abs(zs) > _PCORR_Z_CRIT).alias("significant"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# agg_icc_oneway — STAGED for the r16 cadence (parked unregistered;
-# SURVEY round-14 log). One-way random-effects intraclass correlation
-# ICC(1) on the month × order-value panel: what share of order-value
-# variance lives BETWEEN months? The variance-PARTITIONING member of
-# the reliability family — cronbach asks about internal consistency of
-# a fixed panel, ICC about how much a random grouping explains, the
-# number hierarchical modeling starts from (design effects, pooling
-# decisions).
-# ---------------------------------------------------------------------------
-
-# F(79, inf) 5% = chi2(79,0.95)/79; chi2 quantile computed by bisection
-# on the regularized incomplete gamma (verified against the pinned
-# chi2(1)/chi2(4) literals used elsewhere in this module)
-_ICC_F_CRIT = 1.275298971472789
-
-_ICC_ORACLE = f"""
-WITH mu AS (
-  SELECT {oracle_sum('o_totalprice')} / COUNT(*) AS mu FROM orders
-), g AS (
-  SELECT (year(o_orderdate) * 12 + month(o_orderdate)) AS m,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         {oracle_sum('o_totalprice / mu')} AS sx,
-         {oracle_sum('(o_totalprice / mu) * (o_totalprice / mu)')} AS qx
-  FROM orders CROSS JOIN mu GROUP BY 1
-), tot AS (
-  SELECT CAST(SUM(n) AS DOUBLE) AS nt, CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(SUM(CAST(n AS BIGINT) * n) AS BIGINT) AS sn2,
-         {oracle_pico_sum('sx')} AS sxt,
-         {oracle_pico_sum('qx - sx * sx / n')} AS ssw
-  FROM g
-), ssb_t AS (
-  SELECT nt, k, sn2, ssw,
-         {oracle_pico_sum(
-             'n * (sx / n - sxt / nt) * (sx / n - sxt / nt)'
-         )} AS ssb
-  FROM g CROSS JOIN tot
-  GROUP BY nt, k, sn2, ssw
-), msq AS (
-  SELECT nt, k, ssb / (k - 1) AS msb, ssw / (nt - k) AS msw,
-         (nt - sn2 / nt) / (k - 1) AS k0
-  FROM ssb_t
-)
-SELECT CAST(nt AS BIGINT) AS n_rows, k AS n_groups,
-       FLOOR(k0 * 1e6) / 1e6 AS k0,
-       FLOOR((msb - msw) / (msb + (k0 - 1) * msw) * 1e6) / 1e6
-         AS icc1,
-       FLOOR(msb / msw * 1e6) / 1e6 AS f_stat,
-       FLOOR(msb / msw * 1e6) / 1e6 > {_ICC_F_CRIT!r} AS significant
-FROM msq
-"""
-
-
-def agg_icc_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ICC(1) = (MSB − MSW)/(MSB + (k₀−1)·MSW) over the 80 calendar
-    months with the unbalanced-design group size
-    k₀ = (N − Σn_i²/N)/(g−1), plus the one-way F = MSB/MSW against the
-    pinned F(79, ∞) 5% value (the within df is ~N, so the asymptote is
-    exact to the output quantum). ICC ≈ 0 on the fixture — order
-    values don't cluster by month — and the referee's job is to say so
-    with a calibrated zero, not to find an effect.
-
-    Cross-engine exactness: the bartlett doctrine — scale-invariant
-    mean normalization, decimal-exact group moments, pico-quantized
-    folds over the 80-row month frame (SSB needs the grand mean
-    attached first; Σn² is an exact integer); only the scale-free
-    quantized readouts leave.
-
-    Scale design: one 1-row mean pass, one keyed month rollup, one
-    1-row fold, one bounded fold with the totals attached (broadcast)."""
-    o = table(spark, sf_dir, "orders")
-    mu_df = o.agg(
-        (dsum(F.col("o_totalprice")) / F.count(F.lit(1))).alias("mu")
-    )
-    x = F.col("o_totalprice") / F.col("mu")
-    g = (
-        o.crossJoin(F.broadcast(mu_df))
-        .groupBy(
-            (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias(
-                "m"
-            )
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(x.cast(DSCALE)).cast("double").alias("sx"),
-            F.sum((x * x).cast(DSCALE)).cast("double").alias("qx"),
-        )
-    )
-    g = g.localCheckpoint(eager=True)  # 80-row frame, two consumers
-    n = F.col("n")
-    tot = g.agg(
-        F.sum("n").cast("double").alias("nt"),
-        F.count(F.lit(1)).alias("k"),
-        F.sum(n.cast("long") * n).cast("long").alias("sn2"),
-        _pico_sum(F.col("sx")).alias("sxt"),
-        _pico_sum(F.col("qx") - F.col("sx") * F.col("sx") / n).alias(
-            "ssw"
-        ),
-    )
-    gm = F.col("sxt") / F.col("nt")
-    ssb_t = (
-        g.crossJoin(F.broadcast(tot))
-        .groupBy("nt", "k", "sn2", "ssw")
-        .agg(
-            _pico_sum(
-                n * (F.col("sx") / n - gm) * (F.col("sx") / n - gm)
-            ).alias("ssb")
-        )
-    )
-    nt, k = F.col("nt"), F.col("k")
-    msq = ssb_t.select(
-        "nt",
-        "k",
-        (F.col("ssb") / (k - 1)).alias("msb"),
-        (F.col("ssw") / (nt - k)).alias("msw"),
-        ((nt - F.col("sn2") / nt) / (k - 1)).alias("k0"),
-    )
-    f_stat = fquant(F.col("msb") / F.col("msw"))
-    return msq.select(
-        nt.cast("long").alias("n_rows"),
-        k.alias("n_groups"),
-        fquant(F.col("k0")).alias("k0"),
-        fquant(
-            (F.col("msb") - F.col("msw"))
-            / (F.col("msb") + (F.col("k0") - 1) * F.col("msw"))
-        ).alias("icc1"),
-        f_stat.alias("f_stat"),
-        (f_stat > _ICC_F_CRIT).alias("significant"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# agg_bhattacharyya_distance — STAGED for the r16 cadence (parked
-# unregistered; SURVEY round-14 log). Bhattacharyya coefficient /
-# distance and Hellinger distance between the weekend and weekday
-# order-value histograms: the DISTRIBUTION-overlap member of the
-# divergence family — wasserstein reads transport cost,
-# JS-divergence information, Bhattacharyya geometric overlap (the
-# classifier-separability bound: Bayes error ≤ ½·BC).
-# ---------------------------------------------------------------------------
-
-_BHAT_BINS = 20
-_BHAT_WIDTH = 25000  # fixed-width price bins (fixture range ~1k..500k)
-
-_BHAT_ORACLE = f"""
-WITH b AS (
-  SELECT LEAST({_BHAT_BINS - 1},
-               CAST(FLOOR(o_totalprice / {_BHAT_WIDTH}) AS BIGINT))
-           AS bin,
-         CAST(dayofweek(CAST(o_orderdate AS DATE)) IN (0, 6) AS INT)
-           AS wknd
-  FROM orders
-), cells AS (
-  SELECT bin, CAST(SUM(wknd) AS BIGINT) AS cw,
-         CAST(SUM(1 - wknd) AS BIGINT) AS cd
-  FROM b GROUP BY bin
-), tot AS (
-  SELECT CAST(SUM(cw) AS BIGINT) AS nw, CAST(SUM(cd) AS BIGINT) AS nd,
-         CAST(COUNT(*) AS BIGINT) AS n_bins_used
-  FROM cells
-), bc_t AS (
-  SELECT nw, nd, n_bins_used,
-         {oracle_pico_sum(
-             'sqrt((CAST(cw AS DOUBLE) / nw) * (CAST(cd AS DOUBLE) / nd))'
-         )} AS bc
-  FROM cells CROSS JOIN tot
-  GROUP BY nw, nd, n_bins_used
-)
-SELECT nw AS n_weekend, nd AS n_weekday, n_bins_used,
-       FLOOR(bc * 1e6) / 1e6 AS bc_coefficient,
-       FLOOR(-ln(bc) * 1e6) / 1e6 AS bhattacharyya_d,
-       FLOOR(sqrt(1 - bc) * 1e6) / 1e6 AS hellinger
-FROM bc_t
-"""
-
-
-def agg_bhattacharyya_distance(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """BC = Σ_b √(p_b·q_b) over 20 fixed-width price bins (weekend p
-    vs weekday q), D_B = −ln BC, Hellinger = √(1−BC). BC → 1 reads
-    "same pricing distribution" (the fixture's honest answer — weekend
-    orders are not priced differently), BC → 0 disjoint support; the
-    fixed-width grid is the WoE/lift no-percentile discipline.
-
-    Cross-engine exactness: bins and both marginals are exact
-    integers from ONE conditional rollup; the per-bin √(p·q) terms are
-    fixed-order doubles over those integers, pico-quantized into the
-    exact ≤20-row fold with the 1-row totals attached; ln/√ run on the
-    identical fold value.
-
-    Scale design: one corpus pass to ≤20 cells (map-side-combinable),
-    one 1-row fold, one bounded fold — no joins beyond the 1-row
-    attach, no windows, no Python."""
-    o = table(spark, sf_dir, "orders")
-    b = o.select(
-        F.least(
-            F.lit(_BHAT_BINS - 1),
-            F.floor(F.col("o_totalprice") / _BHAT_WIDTH).cast("long"),
-        ).alias("bin"),
-        F.dayofweek(F.col("o_orderdate").cast("date"))
-        .isin(1, 7)
-        .cast("int")
-        .alias("wknd"),
-    )
-    cells = b.groupBy("bin").agg(
-        F.sum("wknd").cast("long").alias("cw"),
-        F.sum(1 - F.col("wknd")).cast("long").alias("cd"),
-    )
-    cells = cells.localCheckpoint(eager=True)  # ≤20 rows, two consumers
-    tot = cells.agg(
-        F.sum("cw").cast("long").alias("nw"),
-        F.sum("cd").cast("long").alias("nd"),
-        F.count(F.lit(1)).cast("long").alias("n_bins_used"),
-    )
-    bc_t = (
-        cells.crossJoin(F.broadcast(tot))
-        .groupBy("nw", "nd", "n_bins_used")
-        .agg(
-            _pico_sum(
-                F.sqrt(
-                    (F.col("cw").cast("double") / F.col("nw"))
-                    * (F.col("cd").cast("double") / F.col("nd"))
-                )
-            ).alias("bc")
-        )
-    )
-    bc = F.col("bc")
-    return bc_t.select(
-        F.col("nw").alias("n_weekend"),
-        F.col("nd").alias("n_weekday"),
-        F.col("n_bins_used"),
-        fquant(bc).alias("bc_coefficient"),
-        fquant(-F.log(bc)).alias("bhattacharyya_d"),
-        fquant(F.sqrt(1 - bc)).alias("hellinger"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# agg_jonckheere_terpstra — STAGED for the r16 cadence (parked
-# unregistered; SURVEY round-14 log). Jonckheere-Terpstra test for an
-# ORDERED location trend across the five order priorities (1-URGENT <
-# ... < 5-LOW): kruskal asks "any difference"; JT spends its power on
-# the a-priori ordering "value rises (or falls) with priority" — the
-# dose-response member of the k-sample family, computed as the sum of
-# the 10 pairwise Mann-Whitney counts on the exact value ladder.
-# ---------------------------------------------------------------------------
-
-_JT_Z_CRIT = 1.959964  # two-sided 5% normal — pinned literal
-
-_JT_ORACLE = f"""
-WITH base AS (
-  SELECT ROUND(o_totalprice * 100) AS cents,
-         CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS gi
-  FROM orders
-), gv AS (
-  SELECT cents, gi, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM base GROUP BY 1, 2
-), wide AS (
-  SELECT cents,
-         {", ".join(
-             f"CAST(SUM(CASE WHEN gi = {i} THEN cnt ELSE 0 END) "
-             f"AS BIGINT) AS c{i}" for i in range(1, 6)
-         )}
-  FROM gv GROUP BY cents
-), lad AS (
-  SELECT *,
-         {", ".join(
-             f"CAST(COALESCE(SUM(c{i}) OVER (ORDER BY cents "
-             f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) "
-             f"AS BIGINT) AS b{i}" for i in range(1, 6)
-         )}
-  FROM wide
-), f1 AS (
-  SELECT CAST(SUM(CAST(c2 * (2 * b1 + c1) + c3 * (2 * b1 + c1) + c4 * (2 * b1 + c1) + c5 * (2 * b1 + c1) + c3 * (2 * b2 + c2) + c4 * (2 * b2 + c2) + c5 * (2 * b2 + c2) + c4 * (2 * b3 + c3) + c5 * (2 * b3 + c3) + c5 * (2 * b4 + c4) AS DECIMAL(38,0))) AS DOUBLE) AS jt2,
-         CAST(SUM(CAST((c1+c2+c3+c4+c5) AS DECIMAL(38,0))
-                  * (c1+c2+c3+c4+c5 - 1)
-                  * (2 * (c1+c2+c3+c4+c5) + 5)) AS DOUBLE) AS st1,
-         CAST(SUM(CAST((c1+c2+c3+c4+c5) AS DECIMAL(38,0))
-                  * (c1+c2+c3+c4+c5 - 1)
-                  * (c1+c2+c3+c4+c5 - 2)) AS DOUBLE) AS st2,
-         CAST(SUM(CAST((c1+c2+c3+c4+c5) AS DECIMAL(38,0))
-                  * (c1+c2+c3+c4+c5 - 1)) AS DOUBLE) AS st3
-  FROM lad
-), gsz AS (
-  SELECT gi, CAST(SUM(cnt) AS BIGINT) AS n FROM gv GROUP BY gi
-), f2 AS (
-  SELECT CAST(SUM(n) AS DOUBLE) AS nt, CAST(COUNT(*) AS BIGINT) AS k,
-         CAST(SUM(CAST(n AS DECIMAL(38,0)) * n) AS DOUBLE) AS snsq,
-         CAST(SUM(CAST(n AS DECIMAL(38,0)) * (n - 1) * (2 * n + 5))
-              AS DOUBLE) AS sn1,
-         CAST(SUM(CAST(n AS DECIMAL(38,0)) * (n - 1) * (n - 2))
-              AS DOUBLE) AS sn2,
-         CAST(SUM(CAST(n AS DECIMAL(38,0)) * (n - 1)) AS DOUBLE) AS sn3
-  FROM gsz
-), s AS (
-  SELECT jt2 / 2 AS jt, (nt * nt - snsq) / 4 AS mu,
-         (nt * (nt - 1) * (2 * nt + 5) - sn1 - st1) / 72
-         + sn2 * st2 / (36 * nt * (nt - 1) * (nt - 2))
-         + sn3 * st3 / (8 * nt * (nt - 1)) AS var,
-         nt, k
-  FROM f1 CROSS JOIN f2
-)
-SELECT CAST(nt AS BIGINT) AS n_rows, k AS n_groups,
-       jt AS jt_stat,
-       FLOOR((jt - mu) / sqrt(var) * 1e6) / 1e6 AS z_stat,
-       ABS(FLOOR((jt - mu) / sqrt(var) * 1e6) / 1e6)
-         > {_JT_Z_CRIT!r} AS significant
-FROM s
-"""
-
-
-def agg_jonckheere_terpstra(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """JT = Σ_(i<j) U_ij over the 10 ordered priority pairs, counted on
-    the exact cents ladder: 2·U_ij = Σ_v c_j(v)·(2·below_i(v) + c_i(v))
-    — ties counted half, EXACT INTEGERS end to end (the MWU midrank
-    doctrine generalized to all pairs in ONE ladder pass). Normal
-    approximation with the full Hollander-Wolfe tie-corrected variance
-    (its three integer tie/size sums are exact), two-sided against the
-    pinned 5% normal value. A significant NEGATIVE z here would read
-    "order value falls as priority label rises".
-
-    Cross-engine exactness: everything before z is exact integer
-    arithmetic in DECIMAL(38,0) lanes (n³-scale terms overflow a long
-    at corpus scale — the kruskal HUGEINT lesson); z is one fixed-order
-    double expression, floor-quantized.
-
-    Scale design: ranks never materialize — ONE (cents × group) rollup,
-    ONE pivot to the 5-column wide ladder, ONE window pass computing
-    all five strict-below prefixes (meta-scale distinct-value frame;
-    the pareto two-pass buckets are the drop-in past that), two 1-row
-    folds. No joins, no Python."""
-    o = table(spark, sf_dir, "orders")
-    base = o.select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        F.substring(F.col("o_orderpriority"), 1, 1)
-        .cast("long")
-        .alias("gi"),
-    )
-    gv = base.groupBy("cents", "gi").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    gv = gv.cache()  # distinct-value frame, two consumers (ladder, sizes)
-    wide = gv.groupBy("cents").agg(
-        *[
-            F.sum(F.when(F.col("gi") == i, F.col("cnt")).otherwise(0))
-            .cast("long")
-            .alias(f"c{i}")
-            for i in range(1, 6)
-        ]
-    )
-    w_below = (
-        Window.partitionBy(meta_part("cents"))
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    lad = wide.select(
-        "*",
-        *[
-            F.coalesce(F.sum(f"c{i}").over(w_below), F.lit(0))
-            .cast("long")
-            .alias(f"b{i}")
-            for i in range(1, 6)
-        ],
-    )
-
-    def C(i):
-        return F.col(f"c{i}")
-
-    def B(i):
-        return F.col(f"b{i}")
-
-    big = "decimal(38,0)"
-    t = C(1) + C(2) + C(3) + C(4) + C(5)
-    f1 = lad.agg(
-        F.sum((C(2) * (2 * B(1) + C(1)) + C(3) * (2 * B(1) + C(1)) + C(4) * (2 * B(1) + C(1)) + C(5) * (2 * B(1) + C(1)) + C(3) * (2 * B(2) + C(2)) + C(4) * (2 * B(2) + C(2)) + C(5) * (2 * B(2) + C(2)) + C(4) * (2 * B(3) + C(3)) + C(5) * (2 * B(3) + C(3)) + C(5) * (2 * B(4) + C(4))).cast(big)).cast("double").alias("jt2"),
-        F.sum(t.cast(big) * (t - 1) * (2 * t + 5))
-        .cast("double")
-        .alias("st1"),
-        F.sum(t.cast(big) * (t - 1) * (t - 2))
-        .cast("double")
-        .alias("st2"),
-        F.sum(t.cast(big) * (t - 1)).cast("double").alias("st3"),
-    )
-    gsz = gv.groupBy("gi").agg(F.sum("cnt").cast("long").alias("n"))
-    n = F.col("n")
-    f2 = gsz.agg(
-        F.sum("n").cast("double").alias("nt"),
-        F.count(F.lit(1)).alias("k"),
-        F.sum(n.cast(big) * n).cast("double").alias("snsq"),
-        F.sum(n.cast(big) * (n - 1) * (2 * n + 5))
-        .cast("double")
-        .alias("sn1"),
-        F.sum(n.cast(big) * (n - 1) * (n - 2))
-        .cast("double")
-        .alias("sn2"),
-        F.sum(n.cast(big) * (n - 1)).cast("double").alias("sn3"),
-    )
-    nt = F.col("nt")
-    s = f1.crossJoin(F.broadcast(f2)).select(
-        (F.col("jt2") / 2).alias("jt"),
-        ((nt * nt - F.col("snsq")) / 4).alias("mu"),
-        (
-            (nt * (nt - 1) * (2 * nt + 5) - F.col("sn1") - F.col("st1"))
-            / 72
-            + F.col("sn2") * F.col("st2")
-            / (36 * nt * (nt - 1) * (nt - 2))
-            + F.col("sn3") * F.col("st3") / (8 * nt * (nt - 1))
-        ).alias("var"),
-        "nt",
-        "k",
-    )
-    z = fquant((F.col("jt") - F.col("mu")) / F.sqrt(F.col("var")))
-    return s.select(
-        F.col("nt").cast("long").alias("n_rows"),
-        F.col("k").alias("n_groups"),
-        F.col("jt").alias("jt_stat"),
-        z.alias("z_stat"),
-        (F.abs(z) > _JT_Z_CRIT).alias("significant"),
     )

@@ -2312,202 +2312,6 @@ def graph_bipartite_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# graph_clustering_coefficient — STAGED for the r15 cadence (parked
-# unregistered; SURVEY round-13 log). Global transitivity + mean local
-# clustering coefficient over the co-purchase part graph: the
-# triangle-count key answers "how many", this answers "how clumped" —
-# the cohesion ratio community detection and bot-ring screens actually
-# threshold on.
-# ---------------------------------------------------------------------------
-
-_CC_ORACLE = """
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-p AS (
-  SELECT a.l_partkey AS x, b.l_partkey AS y, COUNT(*) AS c
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2
-),
-e AS (SELECT x, y FROM p WHERE c >= 2),
-tri AS (
-  SELECT e1.x AS a, e1.y AS b, e2.y AS c
-  FROM e e1
-  JOIN e e2 ON e2.x = e1.x AND e2.y > e1.y
-  JOIN e e3 ON e3.x = e1.y AND e3.y = e2.y
-),
-tn AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS t
-  FROM (SELECT a AS node FROM tri UNION ALL
-        SELECT b FROM tri UNION ALL SELECT c FROM tri)
-  GROUP BY node
-),
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS d
-  FROM (SELECT x AS node FROM e UNION ALL SELECT y FROM e)
-  GROUP BY node
-),
-loc AS (
-  SELECT deg.node, deg.d, COALESCE(tn.t, 0) AS t,
-         d * (d - 1) / 2 AS wedges
-  FROM deg LEFT JOIN tn USING (node)
-),
-s AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes,
-         CAST(COUNT(*) FILTER (WHERE d >= 2) AS BIGINT) AS n_deg_ge2,
-         CAST(SUM(t) AS BIGINT) / 3 AS n_triangles,
-         CAST(SUM(wedges) AS BIGINT) AS n_wedges,
-         CAST(SUM(CAST(FLOOR(CASE WHEN d >= 2
-                    THEN CAST(t AS DOUBLE) / wedges ELSE 0 END * 1e12)
-                  AS DECIMAL(38,0))) AS DOUBLE) / 1e12 AS sum_local
-  FROM loc
-)
-SELECT n_nodes,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM e) AS n_edges,
-       CAST(n_triangles AS BIGINT) AS n_triangles,
-       n_deg_ge2,
-       FLOOR(3.0 * n_triangles / n_wedges * 1e6) / 1e6 AS transitivity,
-       FLOOR(sum_local / n_deg_ge2 * 1e6) / 1e6 AS mean_local_cc
-FROM s
-"""
-
-
-def graph_clustering_coefficient(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Transitivity = 3·T/Σ wedges and the mean local coefficient
-    2·T_v/(d_v(d_v−1)) over nodes with d ≥ 2, from the SAME
-    degree-oriented triangle enumeration as graph_triangle_count — the
-    pivot row keeps all three corners, so per-node triangle counts are
-    one explode + keyed count on top of the enumeration that already
-    guarantees each triangle materializes exactly once.
-
-    Cross-engine exactness: T_v, degrees and wedge counts are exact
-    integers; local ratios quantize at 1e-12 before the DECIMAL(38,0)
-    pico-unit fold; the two readout ratios form in identical op order
-    and floor-quantize at 1e-6.
-
-    Scale design: identical to the triangle key (edges staged once to
-    scratch parquet for their multiple consumers; degree-ordered
-    orientation bounds per-pivot wedge fan-out at O(√|E|)); the
-    per-node rollups are keyed shuffles over triangle-corner and
-    endpoint rows."""
-    li = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("x"),
-            F.col("b.l_partkey").alias("y"),
-        )
-        .count()
-        .where(F.col("count") >= 2)
-        .select("x", "y")
-    )
-    from trireme_spark.sources.io import staging_dir
-
-    stage = staging_dir("cc_edges", sf_dir)
-    edges.write.mode("overwrite").parquet(stage)
-    edges = spark.read.parquet(stage)
-    deg = (
-        edges.select(F.col("x").alias("node"))
-        .unionAll(edges.select(F.col("y").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select(
-            "node",
-            "deg",
-            (F.col("deg") * F.lit(1 << 32) + F.col("node")).alias("ord"),
-        )
-    )
-    ordered = (
-        edges.join(
-            deg.select(F.col("node").alias("x"), F.col("ord").alias("ord_x")),
-            "x",
-        )
-        .join(
-            deg.select(F.col("node").alias("y"), F.col("ord").alias("ord_y")),
-            "y",
-        )
-    )
-    fwd = ordered.select(
-        F.when(F.col("ord_x") < F.col("ord_y"), F.col("x"))
-        .otherwise(F.col("y"))
-        .alias("src"),
-        F.when(F.col("ord_x") < F.col("ord_y"), F.col("y"))
-        .otherwise(F.col("x"))
-        .alias("dst"),
-        F.greatest("ord_x", "ord_y").alias("ord_dst"),
-    )
-    w1, w2 = fwd.alias("w1"), fwd.alias("w2")
-    wedges = w1.join(
-        w2,
-        (F.col("w1.src") == F.col("w2.src"))
-        & (F.col("w1.ord_dst") < F.col("w2.ord_dst")),
-    ).select(
-        F.col("w1.src").alias("pivot"),
-        F.col("w1.dst").alias("v"),
-        F.col("w2.dst").alias("w"),
-    )
-    closing = fwd.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    tri = wedges.join(closing, ["v", "w"], "left_semi")
-    tn = (
-        tri.select(
-            F.explode(F.array("pivot", "v", "w")).alias("node")
-        )
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("t"))
-    )
-    loc = deg.join(tn, "node", "left").select(
-        "deg",
-        F.coalesce(F.col("t"), F.lit(0)).alias("t"),
-        (F.col("deg") * (F.col("deg") - 1) / 2)
-        .cast("long")
-        .alias("wedges"),
-    )
-    s = loc.agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.count_if(F.col("deg") >= 2).alias("n_deg_ge2"),
-        (F.sum("t") / 3).cast("long").alias("n_triangles"),
-        F.sum("wedges").cast("long").alias("n_wedges"),
-        (
-            F.sum(
-                F.floor(
-                    F.when(
-                        F.col("deg") >= 2,
-                        F.col("t").cast("double") / F.col("wedges"),
-                    ).otherwise(0.0)
-                    * 1e12
-                ).cast("decimal(38,0)")
-            ).cast("double")
-            / 1e12
-        ).alias("sum_local"),
-    )
-    n_edge = edges.agg(F.count(F.lit(1)).alias("n_edges"))
-    return s.crossJoin(F.broadcast(n_edge)).select(
-        "n_nodes",
-        "n_edges",
-        "n_triangles",
-        "n_deg_ge2",
-        fquant(
-            3.0
-            * F.col("n_triangles").cast("double")
-            / F.col("n_wedges")
-        ).alias("transitivity"),
-        fquant(
-            F.col("sum_local") / F.col("n_deg_ge2")
-        ).alias("mean_local_cc"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # graph_rich_club_coefficient — STAGED for the r15 cadence (parked
 # unregistered; SURVEY round-13 log). Rich-club coefficient φ(k) =
 # 2·E_k/(N_k(N_k−1)) at pinned degree thresholds over the co-purchase

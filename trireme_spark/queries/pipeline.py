@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from trireme_spark.functions.text import tokenize
-from trireme_spark.operators.skew import salted_join, two_phase_agg
+from trireme_spark.operators.skew import salted_join
 from trireme_spark.parity import dsum, dsum_wide, meta_part, oracle_sum
 from trireme_spark.registry import register
 from trireme_spark.sources.io import table

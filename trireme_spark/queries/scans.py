@@ -244,8 +244,6 @@ def etl_migration_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed upsert into the Solr sink → read back. Runs on the parquet
     emulations here; on a live cluster the same code targets the real
     connectors (sources/connectors.py)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from trireme_spark.sources.connectors import CassandraSource, SolrSink

@@ -18,7 +18,6 @@ the t6 counter holds one long per user. Nothing buffers the stream.
 
 from __future__ import annotations
 
-import os
 import shutil
 from contextlib import contextmanager
 

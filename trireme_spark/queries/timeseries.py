@@ -11914,7 +11914,6 @@ def ts_conformal_interval_eval(
 # self-match bias ApEn carries.
 # ---------------------------------------------------------------------------
 
-_SAMPEN_M = 2
 _SAMPEN_R_FACTOR = 0.2  # r = 0.2 * population sd (the classical default)
 
 _SAMPEN_ORACLE = f"""

@@ -43,16 +43,14 @@ def shuffle_width() -> int:
 def get_spark(
     app_name: str = "trireme-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str = "8g",
 ) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    shuffle = shuffle_partitions or shuffle_width()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(shuffle_width()))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
