@@ -1,7 +1,8 @@
 """Local mirror of the driver's t2 correctness gate (SURVEY.md §5.3).
 
-Parametrized over every registered query key that has oracle SQL; keys
-without an oracle get a rows-only smoke run, exactly like the driver.
+``test_oracle_parity`` is parametrized over every registered query key and
+runs in the default suite: a key with oracle SQL must hash-match DuckDB,
+and a key without one gets a rows-only smoke run, exactly like the driver.
 Runs at sf0.001 by default (fast); set TRIREME_TEST_SF=/root/testdata/sf0.01
 for the pre-commit full pass.
 """
@@ -18,7 +19,6 @@ def _keys():
     return sorted(registry.QUERIES)
 
 
-@pytest.mark.slow  # opt-in battery: run with -m "" or -m slow
 @pytest.mark.parametrize("key", _keys())
 def test_oracle_parity(spark, key):
     fn = registry.QUERIES[key]

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from trireme_spark.operators.skew import salted_join, two_phase_agg
+from trireme_spark.operators.skew import salted_join
 from trireme_spark.sources.io import table
 
 
@@ -40,19 +40,3 @@ def test_salted_left_join_matches(spark):
     salted = salted_join(ev, users, ["user_id"], n_salts=4, how="left")
     assert _canon(salted) == _canon(plain)
 
-
-def test_two_phase_agg_matches_plain(spark):
-    li = table(spark, SF_SMOKE, "lineitem")
-    plain = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("l_quantity").alias("max_qty"),
-        F.min("l_shipdate").alias("first_ship"),
-    )
-    two = two_phase_agg(
-        li,
-        ["l_returnflag"],
-        {"n": "count:*", "max_qty": "max:l_quantity",
-         "first_ship": "min:l_shipdate"},
-        n_salts=4,
-    )
-    assert _canon(two) == _canon(plain)

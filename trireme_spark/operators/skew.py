@@ -1,9 +1,9 @@
 """Skew-mitigation utilities (SURVEY.md §4).
 
 AQE's skew-join splitting handles sort-merge joins automatically; salting is
-the manual fallback for the cases AQE can't rewrite (aggregations over a hot
-key, broadcast-ineligible dims, pre-AQE clusters). Both operators here are
-result-identical to their naive forms — asserted in tests/test_skew.py.
+the manual fallback for the cases AQE can't rewrite (broadcast-ineligible
+dims, pre-AQE clusters). ``salted_join`` is result-identical to the plain
+join — asserted in tests/test_skew.py.
 """
 
 from __future__ import annotations
@@ -35,41 +35,3 @@ def salted_join(
     )
     return salted.join(dim_rep, on + ["_salt"], how).drop("_salt")
 
-
-def two_phase_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, str],
-    n_salts: int = 8,
-) -> DataFrame:
-    """Hot-key aggregation in two shuffles: (key, salt) partial → key final.
-
-    ``aggs`` maps output column → "sum:col" / "count:*" / "max:col" /
-    "min:col" (decomposable aggregates only — that's what makes the
-    two-phase split algebraically exact). Spark's own partial aggregation
-    already map-side combines; this helps when one key dominates so hard
-    that even the combined partials overload a single reducer.
-    """
-    salt = F.pmod(F.xxhash64(F.struct(*df.columns)), F.lit(n_salts))
-    first_exprs, final_exprs = [], []
-    for out, spec in aggs.items():
-        op, _, col = spec.partition(":")
-        tmp = f"_p_{out}"
-        if op == "count":
-            first_exprs.append(F.count(F.lit(1)).alias(tmp))
-            final_exprs.append(F.sum(tmp).alias(out))
-        elif op == "sum":
-            first_exprs.append(F.sum(col).alias(tmp))
-            final_exprs.append(F.sum(tmp).alias(out))
-        elif op == "max":
-            first_exprs.append(F.max(col).alias(tmp))
-            final_exprs.append(F.max(tmp).alias(out))
-        elif op == "min":
-            first_exprs.append(F.min(col).alias(tmp))
-            final_exprs.append(F.min(tmp).alias(out))
-        else:
-            raise ValueError(f"non-decomposable agg spec: {spec}")
-    partial = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(
-        *first_exprs
-    )
-    return partial.groupBy(*keys).agg(*final_exprs)

@@ -1681,8 +1681,6 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-grained sources cost O(#files) driver-side metadata, which is
     the real 100 TB design constraint (hence manifest/compaction
     keys)."""
-    import hashlib  # noqa: F401 — digest computed engine-side, not here
-
     stage = _tmp("binfiles", sf_dir)
     os.makedirs(stage, exist_ok=True)
     docs = (
